@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Dedup.PhaseDescriptionPrefix
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — writes the full metrics object to `BENCH.json` (the
@@ -28,47 +30,78 @@ import org.apache.spark.sql.SparkSession
   *    (collector-bean deltas), so a storage-pressure outlier — like r6's
   *    q48 3.3–17.5 s spread from accumulated checkpoint blocks — is
   *    attributable from the artifact alone.
+  *  - A stage listener records, per run, the job and stage counts, shuffle
+  *    read/write bytes, disk spill bytes and task GC time (`raw_jobs`,
+  *    `raw_stages`, `raw_shuffle_read_bytes`, `raw_shuffle_write_bytes`,
+  *    `raw_disk_spill_bytes`, `raw_task_gc_ms`), plus the top stages by
+  *    wall time of each query's last run (`top_stages`). Jobs labelled
+  *    "dupClusters <phase>" by [[graft.ops.Dedup.dupClusters]] are summed
+  *    by job wall time per phase into `raw_cc_round_secs`, so a slow
+  *    sample names the round that stalled.
   *  - The cache manager is cleared and a System.gc() is forced between
   *    runs: persisted intermediates never subsidize the next measurement,
   *    and dropped checkpoint/broadcast references are actually cleaned by
   *    ContextCleaner between samples instead of mid-measurement.
+  *  - A query that throws in any run is listed in `failed_queries` (its
+  *    failed samples read -1) so the perf gate fails it instead of
+  *    dropping it.
+  *  - The artifact stamps its environment: `cpus`, `shuffle_partitions`,
+  *    `max_heap_mb`, `spark_version`, `java_version`.
   */
 object Bench {
+  private final case class StageRow(id: Int, name: String, tasks: Int,
+    wallMs: Long, taskMs: Long, shufReadB: Long, shufWriteB: Long,
+    spillB: Long, gcMs: Long)
+
+  /** What the listener saw during one query run. */
+  private final case class RunStats(jobs: Int, stages: Seq[StageRow],
+    phaseMs: Seq[(String, Long)])
+
+  /** Collects job and stage events between two [[take]] calls. */
+  private final class RunListener extends SparkListener {
+    private var jobs = 0
+    private val stages = Vector.newBuilder[StageRow]
+    private val jobPhase = scala.collection.mutable.Map.empty[Int, (String, Long)]
+    private val phaseMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      jobs += 1
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+        .filter(_.startsWith(PhaseDescriptionPrefix))
+        .foreach(d => jobPhase(j.jobId) = (d.stripPrefix(PhaseDescriptionPrefix), j.time))
+    }
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
+      jobPhase.remove(j.jobId).foreach { case (label, t0) =>
+        phaseMs(label) = phaseMs.getOrElse(label, 0L) + (j.time - t0)
+      }
+    }
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val si = sc.stageInfo
+      val m = si.taskMetrics
+      val wall = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
+        .getOrElse(0L)
+      stages += StageRow(si.stageId, si.name.take(60), si.numTasks, wall,
+        m.executorRunTime, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.bytesWritten, m.diskBytesSpilled, m.jvmGCTime)
+    }
+
+    /** Everything seen since the previous call; resets the counters. */
+    def take(): RunStats = synchronized {
+      val out = RunStats(jobs, stages.result(), phaseMs.toList)
+      jobs = 0; stages.clear(); jobPhase.clear(); phaseMs.clear()
+      out
+    }
+  }
+
+  private final case class Sample(sec: Double, gcMs: Long, stats: RunStats)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/BENCH.json")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle width from thread
-    // count for scale drills: local[32] pins cpus, but at sf1.0+ the
-    // honest cluster analogue scales partitions ∝ data (a real deployment
-    // sizes spark.sql.shuffle.partitions to the stage volume, not the
-    // box) — the q143 drill measures exactly that knob.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // Driver-housekeeping caps (round-16 optimization, guide §5: the
-      // driver should do almost no data work). The UI is disabled, but the
-      // status stores still retain 1000 SQL executions' full plan graphs +
-      // per-node metrics and up to 100k task wrappers — across a many-query
-      // run that live set grows until GC dominates: measured on q156 alone
-      // (1 JVM, 7 runs, 8 g heap) wall 7.5→13.9 s RISING with GC 0.4→4.0 s
-      // under the defaults, vs a flat 3.7–4.4 s with GC ~0.1 s capped.
-      // Scale-neutral: these stores serve only the (disabled) UI/REST.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.expr.GraftFunctions.ensureRegistered(spark)
+    val spark = Verify.session()
+    val listener = new RunListener
+    spark.sparkContext.addSparkListener(listener)
 
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
@@ -76,16 +109,23 @@ object Bench {
         .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
     }
 
-    // returns (wall seconds, gc ms observed during the run); -1 on failure
-    def exec(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Long) = {
+    // one run to the noop sink: (wall seconds, gc ms observed during the
+    // run, listener totals); -1 seconds on failure
+    def exec(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
+      listener.take()
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return (-1.0, -1L)
-      }
-      ((System.nanoTime() - t0) / 1e9, gcMillis() - gc0)
+      val sec =
+        try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          -1.0
+        }
+      val gcMs = if (sec < 0) -1L else gcMillis() - gc0
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      Sample(sec, gcMs, listener.take())
     }
 
     // warmup: the flagship query plus one representative of each heavy
@@ -102,43 +142,30 @@ object Bench {
 
     def round3(v: Double): Double = math.round(v * 1000.0) / 1000.0
 
-    // 1 discard + runs measured samples per query, in name order; cache
-    // cleared and a GC forced after every run so neither persisted blocks
-    // nor deferred ContextCleaner work leaks into the next sample.
-    // Queries that run the iterative CC kernel also surface per-round wall
-    // times (drained from Dedup.lastRoundSecs after every run) so a slow
-    // sample in the artifact names the round that stalled.
-    val roundSecs = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
     // Loud subset guard (mirrors Verify): a leaked filter must not let a
     // partial capture pass for a full one — warn on stderr and stamp the
     // filter into the artifact (`"subset_filter"` key below).
-    val onlyFilter = sys.env.get("SPARK_GRAFT_ONLY")
+    val only = Verify.onlyFilter
+    val onlyFilter = only.map(_.mkString(","))
     onlyFilter.foreach { f =>
       System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY=$f — SUBSET run, " +
         "totals are NOT comparable to full captures")
     }
-    val samples: Seq[(String, Seq[(Double, Long)])] =
+    // 1 discard + runs measured samples per query, in name order; cache
+    // cleared and a GC forced after every run so neither persisted blocks
+    // nor deferred ContextCleaner work leaks into the next sample.
+    val samples: Seq[(String, Seq[Sample])] =
       SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) =>
-          // local-iteration filter (unset on the driver), as in Verify
-          sys.env.get("SPARK_GRAFT_ONLY")
-            .forall(_.split(",").exists(name.contains)) }
+        .filter { case (name, _) => only.forall(_.exists(name.contains)) }
         .map { case (name, fn) =>
-        val ts = (0 to runs).map { _ =>
-          graft.ops.Dedup.resetRoundSecs()
-          val (sec, gcMs) = exec(name, fn)
-          val rounds = graft.ops.Dedup.lastRoundSecs
-          if (rounds.nonEmpty) {
-            val obj = rounds.map { case (l, s) => "\"" + l + "\":" + round3(s) }
-              .mkString("{", ",", "}")
-            roundSecs(name) = roundSecs.getOrElse(name, Vector.empty) :+ obj
+          val ts = (0 to runs).map { _ =>
+            val s = exec(name, fn)
+            spark.sharedState.cacheManager.clearCache()
+            System.gc()
+            s.copy(sec = round3(s.sec))
           }
-          spark.sharedState.cacheManager.clearCache()
-          System.gc()
-          (round3(sec), gcMs)
+          name -> ts
         }
-        name -> ts
-      }
 
     def median(ts: Seq[Double]): Double = {
       val ok = ts.filter(_ >= 0).sorted
@@ -147,13 +174,6 @@ object Bench {
       else round3((ok(ok.size / 2 - 1) + ok(ok.size / 2)) / 2.0)
     }
 
-    val medians = samples.map { case (name, ts) => name -> median(ts.tail.map(_._1)) }
-    val qs = medians.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val raw = samples.map { case (k, ts) => "\"" + k + "\":" + ts.map(_._1).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val rawGc = samples.map { case (k, ts) => "\"" + k + "\":" + ts.map(_._2).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val total = round3(medians.map(_._2).filter(_ >= 0).sum)
     // anchored: "sf1." or a dir without an sf prefix must not fabricate an
     // invalid/zero JSON number — fall back to the quoted dir name instead
     // (escaped: a quote/backslash/control char in the path must not emit
@@ -164,14 +184,52 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    def obj(kvs: Iterable[(String, Any)]): String =
+      kvs.map { case (k, v) => jstr(k) + ":" + v }.mkString("{", ",", "}")
+    def arr(xs: Iterable[Any]): String = xs.mkString("[", ",", "]")
+    def perRun(f: Sample => Any): String =
+      obj(samples.map { case (k, ts) => k -> arr(ts.map(f)) })
+
+    val medians = samples.map { case (name, ts) => name -> median(ts.tail.map(_.sec)) }
+    val total = round3(medians.map(_._2).filter(_ >= 0).sum)
+    val failed = samples.collect { case (k, ts) if ts.exists(_.sec < 0) => jstr(k) }
     val sfNum = """sf([0-9]+(?:\.[0-9]+)?)""".r.findFirstMatchIn(sfDir).map(_.group(1))
       .getOrElse(jstr(sfDir))
-    val rawRounds = roundSecs.map { case (k, objs) =>
-      "\"" + k + "\":" + objs.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val subset = onlyFilter.map(f => s""","subset_filter":${jstr(f)}""").getOrElse("")
-    val detail =
-      s"""{"metric":"total_wall_sec","value":$total,"unit":"sec","queries":$qs,"sf":$sfNum,"sf_dir":${jstr(sfDir)},"runs_per_query":$runs,"aggregation":"median_after_discarding_run1","raw_runs":$raw,"raw_gc_ms":$rawGc,"raw_cc_round_secs":$rawRounds$subset}"""
+    val rawRounds = obj(samples.flatMap { case (k, ts) =>
+      val objs = ts.map(_.stats.phaseMs).filter(_.nonEmpty)
+        .map(ps => obj(ps.map { case (l, ms) => l -> round3(ms / 1000.0) }))
+      if (objs.isEmpty) None else Some(k -> arr(objs))
+    })
+    val topStages = obj(samples.map { case (k, ts) =>
+      k -> arr(ts.last.stats.stages.sortBy(-_.wallMs).take(5).map { s =>
+        obj(Seq("id" -> s.id, "name" -> jstr(s.name), "tasks" -> s.tasks,
+          "wall_ms" -> s.wallMs, "task_ms" -> s.taskMs,
+          "shuffle_read_bytes" -> s.shufReadB, "shuffle_write_bytes" -> s.shufWriteB,
+          "disk_spill_bytes" -> s.spillB, "task_gc_ms" -> s.gcMs))
+      })
+    })
+    def stageSum(f: StageRow => Long)(s: Sample): Long = s.stats.stages.map(f).sum
+    val detail = obj(Seq(
+      "metric" -> jstr("total_wall_sec"), "value" -> total, "unit" -> jstr("sec"),
+      "queries" -> obj(medians), "sf" -> sfNum, "sf_dir" -> jstr(sfDir),
+      "runs_per_query" -> runs,
+      "aggregation" -> jstr("median_after_discarding_run1"),
+      "raw_runs" -> perRun(_.sec), "raw_gc_ms" -> perRun(_.gcMs),
+      "raw_cc_round_secs" -> rawRounds) ++
+      onlyFilter.map(f => "subset_filter" -> jstr(f)) ++ Seq(
+      "raw_jobs" -> perRun(_.stats.jobs),
+      "raw_stages" -> perRun(_.stats.stages.size),
+      "raw_shuffle_read_bytes" -> perRun(stageSum(_.shufReadB)),
+      "raw_shuffle_write_bytes" -> perRun(stageSum(_.shufWriteB)),
+      "raw_disk_spill_bytes" -> perRun(stageSum(_.spillB)),
+      "raw_task_gc_ms" -> perRun(stageSum(_.gcMs)),
+      "top_stages" -> topStages,
+      "failed_queries" -> arr(failed),
+      "cpus" -> spark.sparkContext.defaultParallelism,
+      "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
+      "max_heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
+      "spark_version" -> jstr(spark.version),
+      "java_version" -> jstr(System.getProperty("java.version"))))
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath failed: ${e.getMessage}") }
@@ -181,10 +239,10 @@ object Bench {
     // stdout tail, and not printing the multi-KB detail line avoids the
     // fork-output flush race that truncated it mid-line in testing (the
     // full per-run detail is already in the artifact file)
-    val shortQs = medians.map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + v }
-      .mkString("{", ",", "}")
-    val subsetFlag = if (onlyFilter.isDefined) ""","subset":true""" else ""
-    println(
-      s"""{"metric":"total_wall_sec","value":$total,"unit":"sec","queries":$shortQs,"sf":$sfNum,"runs_per_query":$runs,"detail":"$outPath"$subsetFlag}""")
+    println(obj(Seq(
+      "metric" -> jstr("total_wall_sec"), "value" -> total, "unit" -> jstr("sec"),
+      "queries" -> obj(medians.map { case (k, v) => k.takeWhile(_ != '_') -> v }),
+      "sf" -> sfNum, "runs_per_query" -> runs, "detail" -> jstr(outPath)) ++
+      Option.when(onlyFilter.isDefined)("subset" -> true)))
   }
 }

@@ -21,12 +21,9 @@ final class LangIdModel(
     val mult: Long,
     val keys: Array[Long],
     val vals: Array[Long]) extends Serializable {
-  @transient private[this] var u8: Array[UTF8String] = _
-  private[expr] def langU8(i: Int): UTF8String = {
-    var a = u8
-    if (a == null) { a = langs.map(UTF8String.fromString); u8 = a }
-    a(i)
-  }
+  @transient private[this] lazy val u8: Array[UTF8String] =
+    langs.map(UTF8String.fromString)
+  private[expr] def langU8(i: Int): UTF8String = u8(i)
 }
 
 object LangIdModel {

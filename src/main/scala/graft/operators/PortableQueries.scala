@@ -150,7 +150,7 @@ object PortableQueries {
     // persist: the truth relation is consumed THREE times (n_true_pairs,
     // the n_caught semi-join, and the attribution broadcast) and its
     // inverted-index self-join is the audit's single most expensive stage
-    // (~1.5 s/recompute at sf0.1, attributed by ProfRecall) — without the
+    // (~1.5 s/recompute at sf0.1, attributed by a stage listener) — without the
     // persist it re-executes per consumer. Audit-sample-bounded rows.
     val truth = inter
       .join(broadcast(sizes.select(col("doc_id").as("idA"), col("_sz").as("_sa"))), Seq("idA"))

@@ -97,7 +97,7 @@ object Round12Queries {
     * oracle scale (sf0.01: 1.6k nodes → ~2.6M CTE rows; the driver runs
     * oracles at sf0.01 only) and exactly the cost the sketches exist to
     * avoid at corpus scale (the Spark side stays O(|V|·16) state and is
-    * swept at 10× by ProfGraph). */
+    * swept at 10× in the scale sweeps recorded in BASELINE.md). */
   private def q163OracleSql: String =
     (s"WITH RECURSIVE ${NorthStarQueries.tradeGraphCtes},\n" +
       """nodes AS (SELECT DISTINCT src AS node FROM edges),

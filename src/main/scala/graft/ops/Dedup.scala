@@ -516,29 +516,33 @@ object Dedup {
     * from converged output — failing loudly beats returning wrong labels.
     * With pointer jumping the default 20 rounds covers components ~2^17
     * deep; hitting it means something is genuinely wrong.
+    *
+    * Each phase's jobs carry the job description "dupClusters init",
+    * "dupClusters r1", "dupClusters r2", … (each round includes its
+    * checkpoint materialization and the convergence probe), so a listener
+    * can name the round a slow run stalled in. The caller's own description
+    * is restored on return; the job group is left alone, since callers use
+    * it to cancel their jobs.
     */
-  /** Wall seconds per convergence phase of the most recent [[dupClusters]]
-    * call in this JVM (labels: "init", "r1", "r2", …; each round includes
-    * its checkpoint materialization AND the convergence probe). Bench
-    * drains this after every run so a slow q48 sample in the artifact of
-    * record names the round that stalled instead of being unattributable
-    * (the r7 busy-box capture had one 9.08 s run, GC 36 ms — not GC — with
-    * nothing in the artifact to localize it). Volatile snapshot, assigned
-    * once per call; not meant for concurrent dupClusters calls.
-    */
-  @volatile private var _lastRoundSecs: Seq[(String, Double)] = Nil
-  def lastRoundSecs: Seq[(String, Double)] = _lastRoundSecs
-  def resetRoundSecs(): Unit = _lastRoundSecs = Nil
+  /** Prefix of the job description [[dupClusters]] gives each phase. */
+  private[graft] final val PhaseDescriptionPrefix = "dupClusters "
 
   def dupClusters(
       pairs: DataFrame, maxIter: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
-    val phases = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    def timed[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      try f finally phases += label -> ((System.nanoTime() - t0) / 1e9)
-    }
     val sc = pairs.sparkSession.sparkContext
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    try labelComponents(pairs, maxIter, checkpointDir)
+    finally sc.setJobDescription(callerDescription)
+  }
+
+  private def labelComponents(
+      pairs: DataFrame, maxIter: Int, checkpointDir: Option[String]): DataFrame = {
+    val sc = pairs.sparkSession.sparkContext
+    def phase[A](label: String)(f: => A): A = {
+      sc.setJobDescription(PhaseDescriptionPrefix + label)
+      f
+    }
     checkpointDir.foreach { dir =>
       // setCheckpointDir stores a qualified <dir>/<UUID> path, so equality
       // (Option.contains) never matches and every call would reset the dir
@@ -593,14 +597,14 @@ object Dedup {
     // on _dst is equivalent to grouping on _src — and _dst is the cached
     // partitioning key, so the init aggregation runs exchange-free where a
     // groupBy(_src) would re-shuffle the whole edge set once more.
-    var current = timed("init")(ckpt(edges
+    var current = phase("init")(ckpt(edges
       .groupBy(col("_dst").as("id"))
       .agg(least(min(col("_src")), min(col("_dst"))).as("rep"))))
     var labels = current
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
-      timed(s"r${iter + 1}") {
+      phase(s"r${iter + 1}") {
         val neighborMin = edges.join(labels, col("_dst") === col("id"))
           .groupBy(col("_src")).agg(min(col("rep")).as("_nrep"))
         // carry the previous label through so convergence is observed inside
@@ -639,7 +643,6 @@ object Dedup {
       }
     }
     edges.unpersist()
-    _lastRoundSecs = phases.toList
     if (!converged) throw new IllegalStateException(
       s"dupClusters did not converge within maxIter=$maxIter rounds; " +
         "labels were still changing (component diameter exceeds maxIter). " +

@@ -25,12 +25,16 @@ import org.apache.spark.sql.functions._
   * resolve to the alphabetically first language.
   *
   * Scale shape: fitting aggregates (lang, gram) counts — alphabet^n ×
-  * |langs| bounded, never corpus-bounded; the model broadcasts. Scoring is
-  * a scan-side explode + a broadcast model join + ONE doc-keyed aggregate
-  * — embarrassingly parallel, the fit-on-sample / score-everything posture
-  * (at 100 TB you fit on a labeled sample, as q158 does via its
-  * content-hash split). A streaming mirror scores arriving micro-batches
-  * against the saved model with no state store.
+  * |langs| bounded, never corpus-bounded. Scoring collects that bounded
+  * model to the driver and runs ONE fused codegen projection over the
+  * documents ([[graft.expr.LangIdPredict]], see [[predict]]): map-only,
+  * no gram explode, no join, no doc-keyed shuffle — the fit-on-sample /
+  * score-everything posture (at 100 TB you fit on a labeled sample, as
+  * q158 does via its content-hash split). The relational shape (gram
+  * explode + broadcast model join + doc-keyed aggregate) survives only as
+  * [[predictReference]], the reference LangIdSpec checks the kernel
+  * against. A streaming mirror scores arriving micro-batches against the
+  * saved model with no state store.
   */
 object LangId {
 

@@ -340,6 +340,39 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("dupClusters: labels each phase's jobs and restores the caller's description") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(j.jobId -> String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    // a 12-deep chain needs several rounds, so r1 and r2 both show up
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("idA", "idB")
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller job")
+    try {
+      val reps = Dedup.dupClusters(chain).as[(Long, Long)].collect()
+      assert(reps.length == 13 && reps.forall(_._2 == 0L))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq.sortBy(_._1).map(_._2)
+    val labelled = descs.filter(_.startsWith("dupClusters "))
+    val phases = labelled.distinct
+    assert(phases.size >= 3, s"expected init plus at least two rounds: $descs")
+    assert(phases == ("dupClusters init" +: (1 until phases.size).map(r => s"dupClusters r$r")))
+    assert(labelled == labelled.sortBy(phases.indexOf(_)), s"phases out of order: $descs")
+    // the caller's collect afterwards carries the caller's own description
+    val after = descs.reverse.takeWhile(!_.startsWith("dupClusters "))
+    assert(after.nonEmpty && after.forall(_ == "caller job"),
+      s"caller description not restored: $descs")
+  }
+
   test("dupClusters: fails loudly instead of returning truncated labels") {
     import spark.implicits._
     // diameter 12 > maxIter 3: silently returning would split the chain

@@ -25,11 +25,16 @@ that any query may ride through — such a change makes EVERY flag
 actionable, because the grep-level code-to-query map cannot clear it.
 Queries with no recorded baseline are reported as new, never failed —
 record them with --rebaseline once their first quiet-box capture lands.
+A query whose run threw (listed in the artifact's `failed_queries`, or a
+median of -1 in artifacts that predate that key) always FAILS the gate.
 
 Rebaseline mode writes tools/baselines.json with per-query
 {min, median, n} across the given artifacts. Only builder (quiet-box)
 captures belong in the baseline set; driver-box captures are the thing
 the gate screens, not the anchor (BASELINE.md session-noise notes).
+Artifacts stamped with different `cpus` are refused: medians taken at
+different core counts do not pool (artifacts without the stamp are
+accepted as before).
 """
 import json
 import os
@@ -42,7 +47,7 @@ REPO = os.path.dirname(HERE)
 BASELINES = os.path.join(HERE, "baselines.json")
 
 
-def medians(path):
+def load(path):
     with open(path) as f:
         data = json.load(f)
     if data.get("subset_filter"):
@@ -51,7 +56,20 @@ def medians(path):
     qs = data.get("queries")
     if not isinstance(qs, dict) or not qs:
         raise SystemExit(f"{path}: no per-query medians found")
-    return {k: float(v) for k, v in qs.items() if isinstance(v, (int, float)) and v >= 0}
+    return data
+
+
+def medians(data):
+    return {k: float(v) for k, v in data["queries"].items()
+            if isinstance(v, (int, float)) and v >= 0}
+
+
+def failed_queries(data):
+    """Queries whose run threw: the `failed_queries` key, plus any -1
+    median (the only failure record in older artifacts)."""
+    neg = {k for k, v in data["queries"].items()
+           if isinstance(v, (int, float)) and v < 0}
+    return sorted(neg | set(data.get("failed_queries", [])))
 
 
 def git_head():
@@ -64,9 +82,14 @@ def git_head():
 
 
 def rebaseline(paths):
+    docs = [load(p) for p in paths]
+    stamps = {d["cpus"] for d in docs if "cpus" in d}
+    if len(stamps) > 1:
+        raise SystemExit(f"artifacts were captured at different cpus {sorted(stamps)} — "
+                         "rebaseline from one core count")
     per_q = {}
-    for p in paths:
-        for q, sec in medians(p).items():
+    for d in docs:
+        for q, sec in medians(d).items():
             per_q.setdefault(q, []).append(sec)
     base = {q: {"min": round(min(v), 3),
                 "median": round(statistics.median(v), 3),
@@ -137,7 +160,9 @@ def check(path, factor, slack):
         base_doc = json.load(f)
     base = base_doc["baselines"]
     commit = base_doc.get("commit")
-    cur = medians(path)
+    data = load(path)
+    failed = failed_queries(data)
+    cur = {q: sec for q, sec in medians(data).items() if q not in failed}
     flagged, new = [], []
     for q, sec in sorted(cur.items()):
         b = anchor_of(base.get(q))
@@ -167,11 +192,13 @@ def check(path, factor, slack):
               f"host noise, not a regression)")
     for q in new:
         print(f"  new {q}: {cur[q]:.3f}s (no baseline; --rebaseline to record)")
+    for q in failed:
+        print(f"FAIL {q}: run failed")
     ok = len(cur) - len(flagged) - len(new)
     print(f"{ok} within gate, {len(new)} new, {len(drift)} drift, "
           f"{len(actionable)} actionable over {factor:.1f}x+{slack:.1f}s "
-          f"of {os.path.basename(BASELINES)}")
-    if actionable:
+          f"of {os.path.basename(BASELINES)}, {len(failed)} failed")
+    if actionable or failed:
         sys.exit(1)
     print("BENCH GATE PASS")
 

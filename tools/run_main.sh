@@ -1,7 +1,8 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (bypasses the sbt lock;
 # build.sbt's forked-JVM flags reproduced). Usage:
-#   tools/run_main.sh graft.Profile /root/testdata/sf0.1 1
+#   SPARK_GRAFT_ONLY=q128 SPARK_GRAFT_BENCH_OUT=/tmp/bench.json \
+#     tools/run_main.sh graft.Bench
 # Env: SPARK_DRIVER_MEM (default 8g), SPARK_GRAFT_* as usual.
 set -e
 OPENS=""
