@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Dedup.PhaseDescriptionPrefix
+import graft.ops.Graph.RoundDescriptionPrefix
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
@@ -36,8 +37,12 @@ import org.apache.spark.sql.SparkSession
   *    `raw_disk_spill_bytes`, `raw_task_gc_ms`), plus the top stages by
   *    wall time of each query's last run (`top_stages`). Jobs labelled
   *    "dupClusters <phase>" by [[graft.ops.Dedup.dupClusters]] are summed
-  *    by job wall time per phase into `raw_cc_round_secs`, so a slow
-  *    sample names the round that stalled.
+  *    by job wall time per phase into `raw_cc_round_secs`, and jobs
+  *    labelled "Graph.<loop> rN" by the [[graft.ops.Graph]] loops into
+  *    `raw_graph_round_secs` (keyed "<loop> rN"), so a slow sample names
+  *    the round that stalled.
+  *  - `raw_canary_ms` times a fixed integer loop before each run: a
+  *    host-noise reading that flags a capture taken on a busy box.
   *  - The cache manager is cleared and a System.gc() is forced between
   *    runs: persisted intermediates never subsidize the next measurement,
   *    and dropped checkpoint/broadcast references are actually cleaned by
@@ -46,33 +51,45 @@ import org.apache.spark.sql.SparkSession
   *    failed samples read -1) so the perf gate fails it instead of
   *    dropping it.
   *  - The artifact stamps its environment: `cpus`, `shuffle_partitions`,
-  *    `max_heap_mb`, `spark_version`, `java_version`.
+  *    `max_heap_mb`, `spark_version`, `java_version`, and `git_head`
+  *    (read from `.git` in the working directory; null outside a
+  *    checkout).
   */
 object Bench {
   private final case class StageRow(id: Int, name: String, tasks: Int,
     wallMs: Long, taskMs: Long, shufReadB: Long, shufWriteB: Long,
     spillB: Long, gcMs: Long)
 
-  /** What the listener saw during one query run. */
+  /** What the listener saw during one query run; `roundMs` is keyed by
+    * (round family, label), see [[roundOf]]. */
   private final case class RunStats(jobs: Int, stages: Seq[StageRow],
-    phaseMs: Seq[(String, Long)])
+    roundMs: Seq[((String, String), Long)])
+
+  /** The per-round family of a job description, with the round's label:
+    * "dupClusters r2" → ("cc", "r2"), "Graph.pageRank r3" → ("graph", "pageRank r3"). */
+  private def roundOf(desc: String): Option[(String, String)] =
+    if (desc.startsWith(PhaseDescriptionPrefix))
+      Some("cc" -> desc.stripPrefix(PhaseDescriptionPrefix))
+    else if (desc.startsWith(RoundDescriptionPrefix))
+      Some("graph" -> desc.stripPrefix(RoundDescriptionPrefix))
+    else None
 
   /** Collects job and stage events between two [[take]] calls. */
   private final class RunListener extends SparkListener {
     private var jobs = 0
     private val stages = Vector.newBuilder[StageRow]
-    private val jobPhase = scala.collection.mutable.Map.empty[Int, (String, Long)]
-    private val phaseMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+    private val jobRound = scala.collection.mutable.Map.empty[Int, ((String, String), Long)]
+    private val roundMs = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobs += 1
       Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        .filter(_.startsWith(PhaseDescriptionPrefix))
-        .foreach(d => jobPhase(j.jobId) = (d.stripPrefix(PhaseDescriptionPrefix), j.time))
+        .flatMap(roundOf)
+        .foreach(round => jobRound(j.jobId) = (round, j.time))
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
-      jobPhase.remove(j.jobId).foreach { case (label, t0) =>
-        phaseMs(label) = phaseMs.getOrElse(label, 0L) + (j.time - t0)
+      jobRound.remove(j.jobId).foreach { case (round, t0) =>
+        roundMs(round) = roundMs.getOrElse(round, 0L) + (j.time - t0)
       }
     }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
@@ -87,13 +104,49 @@ object Bench {
 
     /** Everything seen since the previous call; resets the counters. */
     def take(): RunStats = synchronized {
-      val out = RunStats(jobs, stages.result(), phaseMs.toList)
-      jobs = 0; stages.clear(); jobPhase.clear(); phaseMs.clear()
+      val out = RunStats(jobs, stages.result(), roundMs.toList)
+      jobs = 0; stages.clear(); jobRound.clear(); roundMs.clear()
       out
     }
   }
 
-  private final case class Sample(sec: Double, gcMs: Long, stats: RunStats)
+  private final case class Sample(sec: Double, gcMs: Long, canaryMs: Double, stats: RunStats)
+
+  @volatile private var canarySink = 0L
+
+  /** Milliseconds for a fixed integer loop: a host-noise reading (perfbench's
+    * canary at a third of the length, ~25 ms on a quiet 4-core box, since a
+    * full capture takes ~800 of them). */
+  private def canaryMs(): Double = {
+    val t0 = System.nanoTime()
+    var x = 0x9E3779B97F4A7C15L
+    var i = 0
+    while (i < 10000000) {
+      x = x * 6364136223846793005L + 1442695040888963407L
+      x ^= x >>> 29
+      i += 1
+    }
+    canarySink ^= x
+    (System.nanoTime() - t0) / 1e6
+  }
+
+  /** The checked-out commit, read from `.git` in the working directory
+    * without spawning `git`; None outside a checkout. */
+  private def gitHead(): Option[String] = {
+    import java.nio.file.{Files, Paths}
+    def read(p: String) =
+      new String(Files.readAllBytes(Paths.get(".git", p)), java.nio.charset.StandardCharsets.UTF_8)
+    try {
+      val head = read("HEAD").trim
+      if (!head.startsWith("ref: ")) Some(head)
+      else {
+        val ref = head.stripPrefix("ref: ")
+        if (Files.exists(Paths.get(".git", ref))) Some(read(ref).trim)
+        else read("packed-refs").linesIterator
+          .collectFirst { case l if l.endsWith(" " + ref) => l.takeWhile(_ != ' ') }
+      }
+    } catch { case _: java.io.IOException => None }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -112,6 +165,7 @@ object Bench {
     // one run to the noop sink: (wall seconds, gc ms observed during the
     // run, listener totals); -1 seconds on failure
     def exec(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
+      val canary = canaryMs()
       listener.take()
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
@@ -125,7 +179,7 @@ object Bench {
         }
       val gcMs = if (sec < 0) -1L else gcMillis() - gc0
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      Sample(sec, gcMs, listener.take())
+      Sample(sec, gcMs, canary, listener.take())
     }
 
     // warmup: the flagship query plus one representative of each heavy
@@ -195,8 +249,9 @@ object Bench {
     val failed = samples.collect { case (k, ts) if ts.exists(_.sec < 0) => jstr(k) }
     val sfNum = """sf([0-9]+(?:\.[0-9]+)?)""".r.findFirstMatchIn(sfDir).map(_.group(1))
       .getOrElse(jstr(sfDir))
-    val rawRounds = obj(samples.flatMap { case (k, ts) =>
-      val objs = ts.map(_.stats.phaseMs).filter(_.nonEmpty)
+    def rawRounds(family: String) = obj(samples.flatMap { case (k, ts) =>
+      val objs = ts.map(_.stats.roundMs.collect { case ((`family`, l), ms) => l -> ms })
+        .filter(_.nonEmpty)
         .map(ps => obj(ps.map { case (l, ms) => l -> round3(ms / 1000.0) }))
       if (objs.isEmpty) None else Some(k -> arr(objs))
     })
@@ -215,7 +270,9 @@ object Bench {
       "runs_per_query" -> runs,
       "aggregation" -> jstr("median_after_discarding_run1"),
       "raw_runs" -> perRun(_.sec), "raw_gc_ms" -> perRun(_.gcMs),
-      "raw_cc_round_secs" -> rawRounds) ++
+      "raw_cc_round_secs" -> rawRounds("cc"),
+      "raw_graph_round_secs" -> rawRounds("graph"),
+      "raw_canary_ms" -> perRun(s => round3(s.canaryMs))) ++
       onlyFilter.map(f => "subset_filter" -> jstr(f)) ++ Seq(
       "raw_jobs" -> perRun(_.stats.jobs),
       "raw_stages" -> perRun(_.stats.stages.size),
@@ -229,7 +286,8 @@ object Bench {
       "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
       "max_heap_mb" -> Runtime.getRuntime.maxMemory / (1024 * 1024),
       "spark_version" -> jstr(spark.version),
-      "java_version" -> jstr(System.getProperty("java.version"))))
+      "java_version" -> jstr(System.getProperty("java.version")),
+      "git_head" -> gitHead().map(jstr).getOrElse("null")))
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] write $outPath failed: ${e.getMessage}") }

@@ -531,18 +531,8 @@ object Dedup {
       pairs: DataFrame, maxIter: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
-    val callerDescription = sc.getLocalProperty("spark.job.description")
-    try labelComponents(pairs, maxIter, checkpointDir)
-    finally sc.setJobDescription(callerDescription)
-  }
-
-  private def labelComponents(
-      pairs: DataFrame, maxIter: Int, checkpointDir: Option[String]): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    def phase[A](label: String)(f: => A): A = {
-      sc.setJobDescription(PhaseDescriptionPrefix + label)
-      f
-    }
+    def phase[A](label: String)(f: => A): A =
+      graft.util.JobLabel(sc, PhaseDescriptionPrefix + label)(f)
     checkpointDir.foreach { dir =>
       // setCheckpointDir stores a qualified <dir>/<UUID> path, so equality
       // (Option.contains) never matches and every call would reset the dir

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, KeyedCheckpoint}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Iterative graph-rank propagation — the power-iteration family (PageRank
@@ -11,24 +12,36 @@ import org.apache.spark.sql.functions._
   * exactly this as its harmonic-centrality host ranking); over the
   * dependency-link graph it is service criticality.
   *
-  * Scale shape (the Pregel loop expressed in Catalyst):
-  *   - the edge relation is normalized ONCE (out-degree mass per source
-  *     attached), hash-partitioned on `src`, and persisted — every
-  *     iteration's join probes that one cached, already-partitioned frame;
-  *   - each iteration is exactly one join (rank vector, keyed by node,
-  *     against edges keyed by src) plus one aggregation keyed by dst — two
-  *     exchanges of |edges| contribution rows carrying 8-byte longs, never
-  *     payloads;
-  *   - the rank vector is locally CHECKPOINTED each iteration (the
-  *     dupClusters discipline), because persist alone is not enough: a
-  *     persisted-but-unbroken lineage nests one plan level per iteration
-  *     and Catalyst re-plans the whole history every step — measured
-  *     1.4 s → 12.5 s of pure driver-side planning growth by iteration 10
-  *     at sf0.1 before the checkpoint was added. On a cluster, a reliable
-  *     `checkpoint()` to the fault-tolerant store is the same call;
-  *   - nothing ever collects to the driver except the node COUNT (one
-  *     scalar) — the rank vector itself stays distributed, so a
-  *     billion-node graph is as fine as a thousand-node one.
+  * Scale shape (the Pregel loop expressed in Catalyst) of the fixed-round
+  * loops — [[pageRank]], [[personalizedPageRank]], [[labelPropagation]],
+  * [[hits]] — all driven by [[iterate]]:
+  *   - the edge relation is keyed ONCE: hash-partitioned on `src` into
+  *     exactly `spark.sql.shuffle.partitions` buckets and checkpointed with
+  *     that layout recorded ([[org.apache.spark.sql.KeyedCheckpoint]]). A
+  *     source's out-weight `wsum` is a window over those partitions, not an
+  *     aggregate joined back;
+  *   - the state vector is keyed the same way on `node` every round, so a
+  *     round's join reads two co-partitioned checkpoints: a shuffle-hash
+  *     join (hinted on the state side) with no Exchange, no Sort and no
+  *     broadcast. The round's ONE Exchange is the `dst`-keyed contribution
+  *     sum, partially aggregated map-side; its output already has the next
+  *     state's layout, so keying the new state adds no shuffle;
+  *   - why the shim: under AQE a plain `localCheckpoint` reports
+  *     UnknownPartitioning, so the src-partitioned, persisted edge relation
+  *     these loops used to build was never reused: every round broadcast
+  *     the whole edge relation and ran a second shuffle (q128 ran 35 jobs
+  *     and q133 45; on this kernel 20 and 23);
+  *   - every checkpoint is LAZY: lineage is cut at definition, so each
+  *     round plans O(1) work (an uncut lineage re-planned the whole
+  *     history: 1.4 s → 12.5 s of driver planning by iteration 10 at
+  *     sf0.1), while materialization folds into the next round's job. Each
+  *     state has exactly one consumer (the next round, or the caller's
+  *     action), so no branch races a half-materialized checkpoint;
+  *   - nothing collects to the driver except scalars (the node count, the
+  *     HITS renormalization sums) — the state stays distributed.
+  * The frontier loops ([[bfsDistances]], [[seedDistancesOver]],
+  * [[weightedDistances]], [[anfSketchesOver]]) and [[kCoreTrace]] still
+  * prepare their own edges (`repartition` + `persist`, plain checkpoints).
   *
   * Cross-engine exactness: ranks are BIGINT "mass units" (the total graph
   * mass is `mass` units) and every step is integer arithmetic —
@@ -53,6 +66,44 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** Job descriptions of the [[iterate]] rounds start with this prefix
+    * ("Graph.pageRank r3"), so a listener can sum their jobs per round. */
+  private[graft] final val RoundDescriptionPrefix = "Graph."
+
+  /** The fixed-round driver: keys `init` on `node`, then runs `rounds`
+    * applications of `step`, keying each new state on `node` again (lazy
+    * checkpoints, see the header). Round N's jobs carry the job description
+    * [[RoundDescriptionPrefix]] + "<loop> rN"; the caller's own description
+    * is restored after each round. A `step` ending in the `dst` aggregate
+    * renamed to `node` is already keyed, so keying it costs no shuffle. */
+  private def iterate(loop: String, init: DataFrame, rounds: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    val sc = init.sparkSession.sparkContext
+    (1 to rounds).foldLeft(KeyedCheckpoint(init, "node")) { (state, r) =>
+      graft.util.JobLabel(sc, s"$RoundDescriptionPrefix$loop r$r")(
+        KeyedCheckpoint(step(state), "node"))
+    }
+  }
+
+  private def weighted(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+
+  /** `edges(src, dst, w)` with long weights, keyed on `src`. */
+  private def srcKeyed(edges: DataFrame): DataFrame =
+    KeyedCheckpoint(weighted(edges), "src")
+
+  /** [[srcKeyed]] edges with each source's out-weight `wsum` attached: a
+    * window over the src partitions, so no aggregate is joined back. */
+  private def normalizedEdges(edges: DataFrame): DataFrame =
+    KeyedCheckpoint(
+      weighted(edges).withColumn("wsum", sum("w").over(Window.partitionBy("src"))), "src")
+
+  /** One power-iteration spread: each source sends `(rank_u * w) div wsum`
+    * along its out-edges, summed per `dst` into `s`. */
+  private def spread(en: DataFrame, ranks: DataFrame): DataFrame =
+    en.join(ranks.hint("shuffle_hash"), en("src") === ranks("node"))
+      .groupBy("dst").agg(sum(expr("(rank_u * w) div wsum")).as("s"))
+
   /** Weighted PageRank over `edges(src, dst, w)`: `iterations` damped
     * power-iteration steps at `dampingPct`/100, returning the final
     * `(node, rank_u)` vector in integer mass units (Σ rank_u ≤ `mass`).
@@ -60,34 +111,17 @@ object Graph {
   def pageRank(edges: DataFrame, iterations: Int, dampingPct: Int = 85,
       mass: Long = 1000000000L): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    val deg = e.groupBy("src").agg(sum("w").as("wsum"))
-    // one normalized, src-partitioned, persisted edge relation for the loop
-    val en = e.join(deg, "src").select("src", "dst", "w", "wsum")
-      .repartition(col("src")).persist()
-    // one distinct, materialized once: the node-count scalar and the rank
-    // init used to each run their own distinct job (round-16 optimization —
-    // count() now scans the checkpointed blocks)
-    val nodes = en.select(col("src").as("node")).distinct().localCheckpoint()
+    val en = normalizedEdges(edges)
+    // the count is the edges' first consumer, so it materializes them
+    val nodes = en.select(col("src").as("node")).distinct()
     val n = nodes.count()
     require(n > 0, "pageRank needs a non-empty edge set")
     val base = mass / n // integer division — the oracle replays `mass // n`
     val hold = ((100L - dampingPct) * base) / 100L
-    // LAZY localCheckpoint (round-16 optimization): still truncates lineage
-    // to a LogicalRDD at definition time (each iteration plans O(1) work),
-    // but materialization folds into the next consumer's job instead of a
-    // dedicated count-job per round — each rank vector has exactly ONE
-    // consumer (the next iteration's join, or the caller's action), so no
-    // branch can race a half-materialized checkpoint. Measured: the eager
-    // form paid one extra job + driver gap per iteration (~0.1 s each at
-    // sf0.1; 45 jobs → 24). Dropped checkpoint blocks are reclaimed by the
-    // ContextCleaner once the previous vector goes unreferenced.
-    var ranks = nodes.withColumn("rank_u", lit(base))
-    for (_ <- 1 to iterations) {
-      ranks = step(en, ranks, dampingPct, hold).localCheckpoint(false)
+    iterate("pageRank", nodes.withColumn("rank_u", lit(base)), iterations) { ranks =>
+      spread(en, ranks).select(col("dst").as("node"),
+        (lit(hold) + expr(s"($dampingPct * s) div 100")).as("rank_u"))
     }
-    en.unpersist()
-    ranks
   }
 
   /** Personalized PageRank (TrustRank): identical damped power iteration,
@@ -107,50 +141,28 @@ object Graph {
       iterations: Int, dampingPct: Int = 85,
       mass: Long = 1000000000L): DataFrame = {
     require(iterations >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-    val deg = e.groupBy("src").agg(sum("w").as("wsum"))
-    val en = e.join(deg, "src").select("src", "dst", "w", "wsum")
-      .repartition(col("src")).persist()
-    // checkpointed once: `nodes` is read by BOTH the seed semi-join and the
-    // holds left-join below — unmaterialized it ran its distinct twice
-    // (round-16 optimization)
-    val nodes = en.select(col("src").as("node")).distinct().localCheckpoint()
-    val eff = nodes.join(seeds.select(col("node")).distinct(), Seq("node"),
-      "left_semi").persist()
-    val nSeeds = eff.count()
+    val en = normalizedEdges(edges)
+    // one node-keyed (node, is_seed) frame carries the seed holds: each
+    // round joins it locally after the dst aggregate (both keyed alike)
+    val seeded = KeyedCheckpoint(en.select(col("src").as("node")).distinct()
+      .join(seeds.select(col("node"), lit(true).as("is_seed")).distinct(), Seq("node"), "left")
+      .select(col("node"), coalesce(col("is_seed"), lit(false)).as("is_seed")), "node")
+    val nSeeds = seeded.where(col("is_seed")).count()
     require(nSeeds > 0, "personalizedPageRank needs at least one seed in the graph")
     val teleport = mass / nSeeds
     val holdSeed = (100L - dampingPct) * teleport / 100L
-    // holds: the per-node teleport floor. Instead of re-joining it against
-    // the rank vector every round, the DESTINATION's hold rides the edge
-    // relation (attached once here), so each iteration stays the q128
-    // shape — one join + one aggregate (12.3 → 10.7 s at sf0.1; the
-    // remaining q128 gap is the en2 build's extra dst-join shuffle)
-    val holds = nodes.join(eff.withColumn("_s", lit(1)), Seq("node"), "left")
-      .select(col("node"),
-        when(col("_s").isNotNull, lit(holdSeed)).otherwise(lit(0L)).as("hold_u"),
-        when(col("_s").isNotNull, lit(teleport)).otherwise(lit(0L)).as("r0"))
-    val en2 = en.join(holds.select(col("node").as("dst"), col("hold_u").as("_dh")), "dst")
-      .select("src", "dst", "w", "wsum", "_dh")
-      .repartition(col("src")).persist()
-    // lazy loop checkpoints: same single-consumer argument as [[pageRank]] —
-    // lineage truncation at definition, materialization folded into the next
-    // round's job (round-16 optimization)
-    var ranks = holds.select(col("node"), col("r0").as("rank_u"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iterations) {
+    // a fresh `node` attribute: each round joins the state's lineage
+    // against `seeded` itself, so the two must not share one
+    val init = seeded.select(col("node").as("node"),
+      when(col("is_seed"), lit(teleport)).otherwise(lit(0L)).as("rank_u"))
+    iterate("personalizedPageRank", init, iterations) { ranks =>
       // every node of a symmetrized graph has an in-edge, so the dst-keyed
       // aggregate covers the whole node set each round (zero-rank sources
       // still emit zero-valued contribution rows)
-      ranks = en2.join(ranks, en2("src") === ranks("node"))
-        .select(col("dst"), col("_dh"), expr("(rank_u * w) div wsum").as("c"))
-        .groupBy("dst").agg(max("_dh").as("_h"), sum("c").as("s"))
-        .select(col("dst").as("node"),
-          (col("_h") + expr(s"($dampingPct * s) div 100")).as("rank_u"))
-        .localCheckpoint(false)
+      spread(en, ranks).join(seeded.hint("shuffle_hash"), col("dst") === seeded("node"))
+        .select(col("dst").as("node"), (when(col("is_seed"), lit(holdSeed)).otherwise(lit(0L)) +
+          expr(s"($dampingPct * s) div 100")).as("rank_u"))
     }
-    en.unpersist(); eff.unpersist(); en2.unpersist()
-    ranks
   }
 
   /** Multi-source BFS hop distance: the shortest hop count from any seed,
@@ -400,52 +412,37 @@ object Graph {
     * run would semi-synchronously color first), which fixed rounds keep
     * reproducible and the oracle replays exactly.
     *
-    * Scale: same loop discipline as [[pageRank]] — edges cached
-    * src-partitioned once; each round is one join + a (dst, label)
-    * aggregate + a dst argmax (two label-keyed exchanges of 8-byte pairs);
-    * the label vector localCheckpoints per round. Labels are node ids, so
+    * Scale: the [[iterate]] kernel, like [[pageRank]]; the contributions
+    * cross ONE dst-keyed exchange that serves both the (dst, label) sum and
+    * the dst argmax (8-byte longs, never payloads). Labels are node ids, so
     * the output is integer-exact anywhere. */
   def labelPropagation(edges: DataFrame, rounds: Int,
       ordBound: Long = 10000000L): DataFrame = {
     require(rounds >= 1)
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src")).persist()
-    // lazy loop checkpoints: single consumer per round (the next join) —
-    // the [[pageRank]] argument (round-16 optimization)
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("lab", col("node")).localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      labels = e.join(labels, e("src") === labels("node"))
+    val e = srcKeyed(edges)
+    val init = e.select(col("src").as("node")).distinct().withColumn("lab", col("node"))
+    iterate("labelPropagation", init, rounds) { labels =>
+      // Spark would shuffle the (dst, lab) sum on both keys and the argmax
+      // again on dst; partitioning on dst first satisfies both
+      e.join(labels.hint("shuffle_hash"), e("src") === labels("node"))
+        .repartition(col("dst"))
         .groupBy(col("dst"), col("lab")).agg(sum("w").as("ws"))
         .groupBy(col("dst"))
         .agg(expr(s"max_by(lab, ws * $ordBound - lab)").as("lab"))
         .select(col("dst").as("node"), col("lab"))
-        .localCheckpoint(false)
     }
-    e.unpersist()
-    labels
   }
-
-  /** One damped power-iteration step over the normalized edge relation —
-    * exposed for plan pinning: the `en` side must reuse its cached src
-    * partitioning (never re-shuffle per iteration) and the contribution
-    * sum must aggregate partially before its dst exchange. */
-  private[graft] def step(en: DataFrame, ranks: DataFrame, dampingPct: Int,
-      hold: Long): DataFrame =
-    en.join(ranks, en("src") === ranks("node"))
-      .select(col("dst"), expr("(rank_u * w) div wsum").as("c"))
-      .groupBy("dst").agg(sum("c").as("s"))
-      .select(col("dst").as("node"),
-        (lit(hold) + expr(s"($dampingPct * s) div 100")).as("rank_u"))
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge set —
     * the bipartite/endorsement rank the symmetrized PageRank family
     * (q128/q133) can't express: a hub is good because it points at good
     * authorities, an authority because good hubs point at it — two
     * mutually-recursive vectors, not one. Integer discipline throughout:
-    * scores are BIGINT mass units, each half-round is ONE src-partitioned
-    * join + ONE dst-keyed (or src-keyed) aggregate shuffling 8-byte longs,
-    * and the per-round renormalization back to ~`mass` total is
+    * scores are BIGINT mass units, each half-round is ONE exchange-free
+    * join of keyed checkpoints (the authority half reads the src-keyed
+    * edges, the hub half a dst-keyed copy built once) + ONE aggregate
+    * shuffling 8-byte longs on the far end, and the per-round
+    * renormalization back to ~`mass` total is
     * `(raw·10000) div (Σraw div 10000)` — both factors exact integer ops
     * (Spark `div` == DuckDB `//` on positives), so the vectors hash-match
     * an unrolled-CTE replay with no float boundary. The Σraw scalar is a
@@ -460,45 +457,35 @@ object Graph {
   def hits(edges: DataFrame, rounds: Int,
       mass: Long = 100000000L): DataFrame = {
     require(rounds >= 1)
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src")).persist()
-    // one distinct, materialized once (the count scalar and the hub init
-    // used to each run their own distinct job — round-16 optimization)
-    val srcNodes = e.select(col("src").as("node")).distinct().localCheckpoint()
+    val es = srcKeyed(edges)
+    // a dst-keyed copy, built once: the hub half-round joins on dst
+    val ed = KeyedCheckpoint(es, "dst")
+    val srcNodes = es.select(col("src").as("node")).distinct()
     val nh = srcNodes.count()
     require(nh > 0, "hits needs a non-empty edge set")
-    var hubs = srcNodes.withColumn("h", lit(mass / nh))
-    var auths: DataFrame = hubs.limit(0).select(col("node"), col("h").as("a"))
-    for (_ <- 1 to rounds) {
-      // only the RAW vectors checkpoint (they are read twice: the renorm
-      // scalar and the next half-round); the normalized vectors are pure
-      // projections over those LogicalRDDs — lineage stays one deep without
-      // paying two more materialization jobs per round. LAZY checkpoints
-      // (round-16): the renorm-scalar collect right below is the first
-      // consumer and materializes the blocks inside its own job; the next
-      // half-round then reads the cached blocks — one job per half-round
-      // instead of two.
-      val ar = e.join(hubs, e("src") === hubs("node"))
-        .select(col("dst"), (col("w") * col("h")).as("x"))
-        .groupBy("dst").agg(sum("x").as("raw")).localCheckpoint(false)
-      val asum = ar.agg(sum("raw")).head().getLong(0)
-      require(asum >= 10000L,
-        s"hits: authority mass $asum < 10000 — raise `mass` (renorm divisor would be 0)")
-      auths = ar.select(col("dst").as("node"),
-        expr(s"(raw * 10000) div (${asum}L div 10000)").as("a"))
-      val hr = e.join(auths, e("dst") === auths("node"))
-        .select(col("src"), (col("w") * col("a")).as("x"))
-        .groupBy("src").agg(sum("x").as("raw")).localCheckpoint(false)
-      val hsum = hr.agg(sum("raw")).head().getLong(0)
-      require(hsum >= 10000L,
-        s"hits: hub mass $hsum < 10000 — raise `mass` (renorm divisor would be 0)")
-      hubs = hr.select(col("src").as("node"),
-        expr(s"(raw * 10000) div (${hsum}L div 10000)").as("h"))
+    // one half-round: scores flow from `from`-keyed edges to their `to`
+    // end, the raw sums are keyed on node and renormalized back to ~mass.
+    // The raw vector is read twice (the renorm scalar and the next half),
+    // so it is the one that checkpoints; the scalar collect is its first
+    // consumer and materializes it inside its own job.
+    def half(e: DataFrame, from: String, to: String, score: DataFrame,
+        side: String): DataFrame = {
+      val raw = KeyedCheckpoint(e.join(score.hint("shuffle_hash"), e(from) === score("node"))
+        .groupBy(to).agg(sum(col("w") * col("x")).as("raw"))
+        .select(col(to).as("node"), col("raw")), "node")
+      val total = raw.agg(sum("raw")).head().getLong(0)
+      require(total >= 10000L,
+        s"hits: $side mass $total < 10000 — raise `mass` (renorm divisor would be 0)")
+      raw.select(col("node"), expr(s"(raw * 10000) div (${total}L div 10000)").as("x"))
     }
-    e.unpersist()
-    hubs.select(lit("hub").as("side"), col("node"), col("h").as("score_u"))
+    var auths: DataFrame = null
+    val hubs = iterate("hits", srcNodes.withColumn("x", lit(mass / nh)), rounds) { hubs =>
+      auths = half(es, "src", "dst", hubs, "authority")
+      half(ed, "dst", "src", auths, "hub")
+    }
+    hubs.select(lit("hub").as("side"), col("node"), col("x").as("score_u"))
       .unionByName(auths.select(lit("auth").as("side"), col("node"),
-        col("a").as("score_u")))
+        col("x").as("score_u")))
   }
 
   // --- triangle census (cohesion) -----------------------------------------

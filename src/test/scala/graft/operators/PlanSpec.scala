@@ -2,7 +2,15 @@ package graft.operators
 
 import graft.pipeline.{Admission, LinkJob, SparkTestSession}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan contracts — the scale promises of SURVEY §4 as assertions,
@@ -10,6 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, extra shuffle, lost partial agg) fails the build. */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
+  /** Plan traversal that descends into adaptive plans and query stages. */
+  private object AQEPlans extends AdaptiveSparkPlanHelper
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String =
@@ -504,48 +514,74 @@ class PlanSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
-  test("pageRank: the iteration join reuses the cached src partitioning " +
-      "and the contribution sum aggregates partially") {
+  /** The executed plans of the checkpoints `run` cuts above a join — one
+    * per graph round (per half-round for HITS), in cut order. Captured
+    * from the real run, under the session's own config (AQE on, the
+    * default broadcast threshold). */
+  private def roundPlans(run: => Unit): Seq[SparkPlan] = {
+    val cuts = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") cuts.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { run; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    cuts.asScala.toSeq.filter(p => AQEPlans.find(p)(_.isInstanceOf[BaseJoinExec]).isDefined)
+  }
+
+  /** One round: exactly one Exchange, hash-partitioned on `key`; no
+    * broadcast and no sort anywhere. Returns the exchange. */
+  private def assertOneExchange(p: SparkPlan, key: String): ShuffleExchangeExec = {
+    val shuffles = AQEPlans.collect(p) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.size == 1, s"one Exchange per round expected\n$p")
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.map(_.asInstanceOf[Attribute].name) == Seq(key), s"\n$p")
+      case other => fail(s"expected a hash exchange on $key, got $other\n$p")
+    }
+    assert(AQEPlans.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"no broadcast: the edges and the state are co-partitioned checkpoints\n$p")
+    assert(AQEPlans.collect(p) { case s: SortExec => s }.isEmpty, s"no sort\n$p")
+    shuffles.head
+  }
+
+  private def assertPartialBelow(x: ShuffleExchangeExec): Unit =
+    assert(AQEPlans.find(x.child) {
+      case h: HashAggregateExec => h.aggregateExpressions.exists(_.mode == Partial)
+      case _ => false
+    }.isDefined, s"contributions must combine map-side before the exchange\n$x")
+
+  private lazy val roundEdges = {
     import spark.implicits._
-    val restore = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
-      "spark.sql.autoBroadcastJoinThreshold" ->
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // the same normalized-edge construction Graph.pageRank performs
-      val pairs = (1L to 64L).map(i => (s"a$i", s"b${i % 8}", 1L + i % 3))
-      val e = (pairs ++ pairs.map(p => (p._2, p._1, p._3)))
-        .toDF("src", "dst", "w")
-      val deg = e.groupBy("src")
-        .agg(org.apache.spark.sql.functions.sum("w").as("wsum"))
-      val en = e.join(deg, "src").select("src", "dst", "w", "wsum")
-        .repartition(org.apache.spark.sql.functions.col("src")).persist()
-      en.count()
-      val ranks = en.select(org.apache.spark.sql.functions.col("src").as("node"))
-        .distinct()
-        .withColumn("rank_u", org.apache.spark.sql.functions.lit(1000000L))
-        .localCheckpoint()
-      val next = graft.ops.Graph.step(en, ranks, 85, 1000L)
-      val exec = next.queryExecution.executedPlan
-      val joins = exec.collect {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j: org.apache.spark.sql.execution.SparkPlan
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-      }
-      assert(joins.nonEmpty, s"expected a shuffle join\n$exec")
-      val cachedSide = joins.head.children.find(c => c.collectFirst {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-      }.nonEmpty)
-      assert(cachedSide.nonEmpty, s"expected the cached edges under the join\n$exec")
-      val reshuffles = cachedSide.get.collect {
-        case x: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => x }
-      assert(reshuffles.isEmpty,
-        s"edges side re-shuffled despite cached hash partitioning:\n${cachedSide.get}")
-      assert(exec.toString.contains("partial_sum"),
-        s"contributions must combine map-side before the dst exchange\n$exec")
-      en.unpersist()
-    } finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
+    val pairs = (1L to 64L).map(i => (i, 100L + i % 8, 1L + i % 3))
+    (pairs ++ pairs.map(p => (p._2, p._1, p._3))).toDF("src", "dst", "w")
+  }
+
+  test("graph rounds: one dst exchange after partial_sum, no broadcast, no sort " +
+      "(pageRank, hits, labelPropagation under the session's config)") {
+    val pr = roundPlans(graft.ops.Graph.pageRank(roundEdges, 3).collect())
+    assert(pr.size == 3, s"one cut per round expected, got ${pr.size}")
+    pr.foreach(p => assertPartialBelow(assertOneExchange(p, "dst")))
+
+    // HITS alternates: authorities gather on dst, hubs on src
+    val hits = roundPlans(graft.ops.Graph.hits(roundEdges, 2).collect())
+    assert(hits.size == 4, s"one cut per half-round expected, got ${hits.size}")
+    hits.zipWithIndex.foreach { case (p, i) =>
+      assertPartialBelow(assertOneExchange(p, if (i % 2 == 0) "dst" else "src"))
+    }
+
+    // label propagation: the one dst exchange serves both the (dst, label)
+    // sum and the dst argmax, so it sits under both aggregates
+    val lpa = roundPlans(graft.ops.Graph.labelPropagation(roundEdges, 2).collect())
+    assert(lpa.size == 2, s"one cut per round expected, got ${lpa.size}")
+    lpa.foreach { p =>
+      val x = assertOneExchange(p, "dst")
+      assert(AQEPlans.collect(p) { case h: HashAggregateExec => h }.size == 4, s"\n$p")
+      assert(AQEPlans.find(x.child)(_.isInstanceOf[HashAggregateExec]).isEmpty, s"\n$p")
+    }
     spark.sharedState.cacheManager.clearCache()
   }
 

@@ -361,6 +361,73 @@ class GraphSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("pageRank: each round's jobs carry \"Graph.pageRank rN\"; " +
+      "the caller's description is restored") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(j.jobId -> String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    val edges = Seq(("a", "b", 2L), ("b", "a", 1L), ("b", "c", 1L), ("c", "b", 9L))
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller job")
+    try {
+      val ranks = Graph.pageRank(edges.toDF("src", "dst", "w"), 3)
+      assert(sc.getLocalProperty("spark.job.description") == "caller job")
+      assert(ranks.as[(String, Long)].collect().toMap == ref(edges, 3))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq.sortBy(_._1).map(_._2)
+    val rounds = descs.filter(_ != "caller job")
+    assert(rounds.nonEmpty && rounds.distinct == (1 to 3).map(r => s"Graph.pageRank r$r"),
+      s"every other job runs under the caller's description: $descs")
+    assert(rounds == rounds.sorted, s"rounds out of order: $descs")
+    // setup (the node count) and the caller's collect keep the caller's label
+    assert(descs.head == "caller job" && descs.last == "caller job", descs)
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("KeyedCheckpoint property: every row sits in partition pmod(hash(key), n), " +
+      "for long and string keys with nulls") {
+    import org.apache.spark.sql.KeyedCheckpoint
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val rnd = new scala.util.Random(20261017L)
+    def check(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val cut = KeyedCheckpoint(df, "k")
+      if (rnd.nextBoolean()) cut.count() // materialized before the checks, or by them
+      val misplaced = cut.where(spark_partition_id() =!= pmod(hash(col("k")), lit(n))).count()
+      assert(misplaced == 0L, s"$what: $misplaced rows off their hash partition")
+      assert(cut.count() == df.count(), what)
+      assert(cut.rdd.getNumPartitions == n, what)
+    }
+    for (case_ <- 1 to 10) {
+      val rows = Seq.fill(rnd.nextInt(200)) {
+        (if (rnd.nextInt(8) == 0) None else Some(rnd.nextLong() % 50), rnd.nextInt())
+      }
+      check(rows.toDF("k", "v"), s"long case $case_ $rows")
+      val strs = rows.map { case (k, v) => (k.map(x => s"s$x"), v) }
+      check(strs.toDF("k", "v"), s"string case $case_ $strs")
+    }
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  test("KeyedCheckpoint: an upstream layout with the wrong partition count fails loudly") {
+    import org.apache.spark.sql.{ClaimedLayout, KeyedCheckpoint}
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the scan claims HashPartitioning(k, n), so the repartition is elided,
+    // but its rows sit in n + 1 partitions
+    val lying = ClaimedLayout(spark.range(40).toDF("k").repartition(n + 1), "k", n)
+    val e = intercept[IllegalStateException](KeyedCheckpoint(lying, "k"))
+    assert(e.getMessage.contains("`k`") && e.getMessage.contains(s"${n + 1} partitions") &&
+      e.getMessage.contains(s"expected $n"), e.getMessage)
+  }
+
   // --- triangle census ------------------------------------------------------
 
   /** O(n³) reference triangle set over an undirected edge list (pairs in

@@ -27,6 +27,8 @@ Queries with no recorded baseline are reported as new, never failed —
 record them with --rebaseline once their first quiet-box capture lands.
 A query whose run threw (listed in the artifact's `failed_queries`, or a
 median of -1 in artifacts that predate that key) always FAILS the gate.
+The artifact's `git_head` and a summary of its `raw_canary_ms` host-noise
+readings are printed first when present (older artifacts lack both).
 
 Rebaseline mode writes tools/baselines.json with per-query
 {min, median, n} across the given artifacts. Only builder (quiet-box)
@@ -70,6 +72,21 @@ def failed_queries(data):
     neg = {k for k, v in data["queries"].items()
            if isinstance(v, (int, float)) and v < 0}
     return sorted(neg | set(data.get("failed_queries", [])))
+
+
+def env_notes(data):
+    """The artifact's commit and host-noise canary (`raw_canary_ms`, a
+    fixed integer loop timed before each run), when it carries them."""
+    notes = []
+    if data.get("git_head"):
+        notes.append(f"git_head {data['git_head']}")
+    canary = [ms for runs in data.get("raw_canary_ms", {}).values()
+              for ms in runs if isinstance(ms, (int, float)) and ms > 0]
+    if canary:
+        med = statistics.median(canary)
+        notes.append(f"canary median {med:.1f} ms, spread "
+                     f"{(max(canary) - min(canary)) / med:.2f} over {len(canary)} runs")
+    return notes
 
 
 def git_head():
@@ -161,6 +178,8 @@ def check(path, factor, slack):
     base = base_doc["baselines"]
     commit = base_doc.get("commit")
     data = load(path)
+    for note in env_notes(data):
+        print(note)
     failed = failed_queries(data)
     cur = {q: sec for q, sec in medians(data).items() if q not in failed}
     flagged, new = [], []

@@ -1,5 +1,6 @@
-"""Self-tests for bench_check.py: a failed query fails the gate, and
-artifacts captured at different core counts are not pooled.
+"""Self-tests for bench_check.py: a failed query fails the gate,
+artifacts captured at different core counts are not pooled, and the
+commit and canary stamps are printed when an artifact carries them.
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -47,6 +48,20 @@ class BenchCheckTest(unittest.TestCase):
         self.assertEqual(r.returncode, 1, r.stdout + r.stderr)
         self.assertIn("FAIL q2_flaky: run failed", r.stdout)
         self.assertNotIn("q1_ok: run failed", r.stdout)
+
+    def test_prints_git_head_and_canary_when_present(self):
+        path = artifact(self.tmp.name, "bench.json", queries={"q1_new": 1.0},
+                        git_head="0123abc",
+                        raw_canary_ms={"q1_new": [40.0, 50.0, 60.0]})
+        r = self.gate(path)
+        self.assertEqual(r.returncode, 0, r.stdout + r.stderr)
+        self.assertIn("git_head 0123abc", r.stdout)
+        self.assertIn("canary median 50.0 ms, spread 0.40 over 3 runs", r.stdout)
+        legacy = artifact(self.tmp.name, "legacy.json", queries={"q1_new": 1.0})
+        r = self.gate(legacy)
+        self.assertEqual(r.returncode, 0, r.stdout + r.stderr)
+        self.assertNotIn("git_head", r.stdout)
+        self.assertNotIn("canary", r.stdout)
 
     def test_rebaseline_refuses_mixed_cpus(self):
         a = artifact(self.tmp.name, "a.json", queries={"q1": 1.0}, cpus=8)
