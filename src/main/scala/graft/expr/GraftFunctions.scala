@@ -166,23 +166,4 @@ object GraftFunctions {
     * the one fused pass; do NOT pre-lower). */
   def charGramH60(text: Column, n: Int): Column =
     call_function("graft_char_gram_h60", text, lit(n))
-
-  private val dynamicNames = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Bind an expression whose constructor carries a non-literal model object
-    * (a probe index, a codebook, …) to a Column: registers a closure-
-    * capturing builder under a unique per-binding name and calls it. The
-    * model rides INSIDE the expression instance, so it serializes with the
-    * plan to executors like any literal — the unique name only exists to
-    * route Column→Expression through the (analysis-time) registry without
-    * touching private[sql] constructors. */
-  def bindExpr(spark: SparkSession, prefix: String,
-      build: Seq[Expression] => Expression, args: Column*): Column = {
-    val name = s"graft_${prefix}_${dynamicNames.incrementAndGet()}"
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(GraftFunctions.getClass.getName, name),
-      build)
-    call_function(name, args: _*)
-  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (gram, lang) pair absent from the fitted table holds that language's OOV
   * floor, the relational path's `coalesce(llu, oov)`). Rides inside the
   * bound expression, so it serializes with the plan like any literal
-  * (GraftFunctions.bindExpr). */
+  * (bound through org.apache.spark.sql.ExpressionColumn). */
 final class LangIdModel(
     val langs: Array[String],
     val priorU: Array[Long],
@@ -192,8 +192,9 @@ case class CharGramH60(child: Expression, n: Int)
 }
 
 /** `graft_langid_pred(text)` — fused NB language prediction under a
-  * collected [[LangIdModel]] (bind via GraftFunctions.bindExpr: the model
-  * rides inside the expression instance). */
+  * collected [[LangIdModel]] (bound through
+  * org.apache.spark.sql.ExpressionColumn: the model rides inside the
+  * expression instance). */
 case class LangIdPredict(child: Expression, n: Int, model: LangIdModel)
     extends UnaryExpression with ExpectsInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)

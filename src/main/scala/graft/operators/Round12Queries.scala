@@ -306,7 +306,7 @@ object Round12Queries {
     // join of pred back onto the labels (predict is a map of the same rows
     // and doc_id is unique, so join-on-id ≡ in-place projection; null-text
     // docs drop exactly as the old inner join on the aggregate did).
-    val predCol = LangId.predictColumn(spark, col("text"), n = 3,
+    val predCol = LangId.predictColumn(col("text"), n = 3,
       model = model, langStats = langStats)
     graft.ops.Partitioning.spread(test.where(col("text").isNotNull))
       .select(col("lang"), predCol.as("pred"))

@@ -224,23 +224,14 @@ object Round13Queries {
     * data); the audit join is |seeds|×hops rows. */
   def anfCalibration(spark: SparkSession, dir: String): DataFrame = {
     val edges = NorthStarQueries.tradeEdges(spark, dir)
-    // ONE src-partitioned cached edge relation shared by the exact BFS and
-    // the sketch propagation (round-16 optimization: the two passes each
-    // built and persisted their own copy, and the AQE stage futures raced
-    // both builds through the parquet scan concurrently — two 64-task
-    // scan+shuffle stages for the same relation in the profile).
-    // Ownership: Verify/Bench clear the cache after each query's action.
-    val en = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
     // graph-member seeds only: the old sketch side was keyed on the
     // propagation's node set (trading nodes), so a non-trading seed was
     // dropped by the final inner join — filtering upfront preserves that
     // contract now that the sketch side derives from `dist` (below)
     val seeds = NorthStarQueries.calibrationSeeds(spark, dir)
-      .join(en.select(col("src").as("node")), Seq("node"), "left_semi")
-      .persist()
+      .join(edges.select(col("src").as("node")), Seq("node"), "left_semi")
     // exact per-seed ball sizes (self included: dist 0 rows count)
-    val dist = graft.ops.Graph.seedDistancesOver(en, seeds, maxHops = 3)
+    val dist = graft.ops.Graph.seedDistances(edges, seeds, maxHops = 3)
     val exCols = (1 to 3).map(h =>
       sum(when(col("dist") <= h, 1L).otherwise(0L)).as(s"e$h"))
     val ex = dist.groupBy(col("seed").as("node"))
@@ -669,7 +660,7 @@ object Round13Queries {
     // (bigram counts, per-lang vocab, the unscored anti-join) — unpersisted,
     // each read re-runs the scoring pass. Ownership: Verify/Bench clear
     // caches per query.
-    val predCol = graft.ops.LangId.predictColumn(spark, col("text"), n = 3,
+    val predCol = graft.ops.LangId.predictColumn(col("text"), n = 3,
       model = model, langStats = langStats)
     val routed = Partitioning.spread(
         docs.where(col("text").isNotNull).select(col("doc_id"), col("text")))

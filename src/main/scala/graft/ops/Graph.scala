@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
   * exactly this as its harmonic-centrality host ranking); over the
   * dependency-link graph it is service criticality.
   *
-  * Scale shape (the Pregel loop expressed in Catalyst) of the fixed-round
-  * loops — [[pageRank]], [[personalizedPageRank]], [[labelPropagation]],
-  * [[hits]] — all driven by [[iterate]]:
+  * Scale shape (the Pregel loop expressed in Catalyst) of every loop here —
+  * the fixed-round [[pageRank]], [[personalizedPageRank]],
+  * [[labelPropagation]], [[hits]], [[anfSketches]] and [[kCoreTrace]], and
+  * the frontier loops [[bfsDistances]], [[seedDistances]] and
+  * [[weightedDistances]] — all driven by [[iterate]]:
   *   - the edge relation is keyed ONCE: hash-partitioned on `src` into
   *     exactly `spark.sql.shuffle.partitions` buckets and checkpointed with
   *     that layout recorded ([[org.apache.spark.sql.KeyedCheckpoint]]). A
@@ -23,9 +25,11 @@ import org.apache.spark.sql.functions._
   *   - the state vector is keyed the same way on `node` every round, so a
   *     round's join reads two co-partitioned checkpoints: a shuffle-hash
   *     join (hinted on the state side) with no Exchange, no Sort and no
-  *     broadcast. The round's ONE Exchange is the `dst`-keyed contribution
-  *     sum, partially aggregated map-side; its output already has the next
-  *     state's layout, so keying the new state adds no shuffle;
+  *     broadcast. The round's ONE Exchange moves its output to the node it
+  *     lands on (the `dst`-keyed contribution sum, partially aggregated
+  *     map-side; a frontier loop's offers; the peel's surviving edges);
+  *     that output already has the next state's layout, so keying the new
+  *     state adds no shuffle;
   *   - why the shim: under AQE a plain `localCheckpoint` reports
   *     UnknownPartitioning, so the src-partitioned, persisted edge relation
   *     these loops used to build was never reused: every round broadcast
@@ -34,14 +38,12 @@ import org.apache.spark.sql.functions._
   *   - every checkpoint is LAZY: lineage is cut at definition, so each
   *     round plans O(1) work (an uncut lineage re-planned the whole
   *     history: 1.4 s → 12.5 s of driver planning by iteration 10 at
-  *     sf0.1), while materialization folds into the next round's job. Each
-  *     state has exactly one consumer (the next round, or the caller's
-  *     action), so no branch races a half-materialized checkpoint;
+  *     sf0.1), while materialization folds into the next round's job. The
+  *     next round reads a state before any other reader does, so no
+  *     branch races a half-materialized checkpoint;
   *   - nothing collects to the driver except scalars (the node count, the
-  *     HITS renormalization sums) — the state stays distributed.
-  * The frontier loops ([[bfsDistances]], [[seedDistancesOver]],
-  * [[weightedDistances]], [[anfSketchesOver]]) and [[kCoreTrace]] still
-  * prepare their own edges (`repartition` + `persist`, plain checkpoints).
+  *     HITS renormalization sums, a frontier loop's one emptiness probe
+  *     per round) — the state stays distributed.
   *
   * Cross-engine exactness: ranks are BIGINT "mass units" (the total graph
   * mass is `mass` units) and every step is integer arithmetic —
@@ -70,19 +72,30 @@ object Graph {
     * ("Graph.pageRank r3"), so a listener can sum their jobs per round. */
   private[graft] final val RoundDescriptionPrefix = "Graph."
 
-  /** The fixed-round driver: keys `init` on `node`, then runs `rounds`
+  /** The one loop driver: keys `init` on `node`, then runs up to `rounds`
     * applications of `step`, keying each new state on `node` again (lazy
-    * checkpoints, see the header). Round N's jobs carry the job description
+    * checkpoints, see the header), and returns every state, `init`'s first.
+    * A frontier loop names its boolean `frontier` column: the loop ends
+    * after the first round whose state flags no row. Round N's jobs, that
+    * emptiness probe included, carry the job description
     * [[RoundDescriptionPrefix]] + "<loop> rN"; the caller's own description
-    * is restored after each round. A `step` ending in the `dst` aggregate
-    * renamed to `node` is already keyed, so keying it costs no shuffle. */
-  private def iterate(loop: String, init: DataFrame, rounds: Int)(
-      step: DataFrame => DataFrame): DataFrame = {
+    * is restored after each round. A `step` ending in an aggregate on a
+    * column renamed to `node` is already keyed, so keying it costs no
+    * shuffle. */
+  private def iterate(loop: String, init: DataFrame, rounds: Int,
+      frontier: Option[String] = None)(step: DataFrame => DataFrame): Seq[DataFrame] = {
     val sc = init.sparkSession.sparkContext
-    (1 to rounds).foldLeft(KeyedCheckpoint(init, "node")) { (state, r) =>
-      graft.util.JobLabel(sc, s"$RoundDescriptionPrefix$loop r$r")(
-        KeyedCheckpoint(step(state), "node"))
-    }
+    def from(state: DataFrame, r: Int): List[DataFrame] =
+      if (r > rounds) Nil
+      else {
+        val (next, live) = graft.util.JobLabel(sc, s"$RoundDescriptionPrefix$loop r$r") {
+          val next = KeyedCheckpoint(step(state), "node")
+          (next, frontier.forall(f => !next.where(col(f)).isEmpty))
+        }
+        next :: (if (live) from(next, r + 1) else Nil)
+      }
+    val first = KeyedCheckpoint(init, "node")
+    first :: from(first, 1)
   }
 
   private def weighted(edges: DataFrame): DataFrame =
@@ -121,7 +134,7 @@ object Graph {
     iterate("pageRank", nodes.withColumn("rank_u", lit(base)), iterations) { ranks =>
       spread(en, ranks).select(col("dst").as("node"),
         (lit(hold) + expr(s"($dampingPct * s) div 100")).as("rank_u"))
-    }
+    }.last
   }
 
   /** Personalized PageRank (TrustRank): identical damped power iteration,
@@ -162,7 +175,7 @@ object Graph {
       spread(en, ranks).join(seeded.hint("shuffle_hash"), col("dst") === seeded("node"))
         .select(col("dst").as("node"), (when(col("is_seed"), lit(holdSeed)).otherwise(lit(0L)) +
           expr(s"($dampingPct * s) div 100")).as("rank_u"))
-    }
+    }.last
   }
 
   /** Multi-source BFS hop distance: the shortest hop count from any seed,
@@ -174,33 +187,12 @@ object Graph {
     * graph costs nothing more (empty frontier short-circuits the loop).
     * Seeds sit at distance 0 whether or not they trade; unreached nodes
     * are ABSENT from the returned (node, dist) vector (the caller decides
-    * their sentinel). Pure integer output — hash-exact anywhere. */
+    * their sentinel). Pure integer output — hash-exact anywhere. It is
+    * [[weightedDistances]] with every edge of length 1: the nodes a round
+    * improves are exactly the ones it reaches first. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    require(maxHops >= 0)
-    val en = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var h = 1
-    var done = maxHops == 0
-    while (!done) {
-      val cand = en.join(frontier, en("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-      val fresh = cand.join(dist, Seq("node"), "left_anti")
-        .withColumn("dist", lit(h.toLong)).localCheckpoint()
-      if (fresh.isEmpty) done = true
-      else {
-        dist = dist.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-        h += 1
-        if (h > maxHops) done = true
-      }
-    }
-    en.unpersist()
-    dist
-  }
+      maxHops: Int): DataFrame =
+    distances("bfsDistances", unitLength(edges), seeds, maxHops, perSeed = false)
 
   /** PER-SEED bounded BFS hop distances: [[bfsDistances]] with seed
     * identity carried through the frontier, so the result is the full
@@ -213,50 +205,48 @@ object Graph {
     * by |sample| × |reached|, which is why the CALLER passes a seed SAMPLE
     * (the q157 discipline: deterministic modulo sample, documented rate),
     * never the full node set; with that, each round is one frontier⋈edges
-    * join + a distinct + an anti-join of 16-byte rows, Σ|frontier-incident
-    * edges| total work, empty-frontier short-circuit. (The sketched
+    * join and one min-merge of 24-byte rows, Σ|frontier-incident edges|
+    * total work, empty-frontier short-circuit. (The sketched
     * alternative — HyperBall's HyperLogLog counters, Boldi & Vigna 2013 —
     * trades this exactness for O(|V|) state; the exact per-seed-sample
     * relation is what the integer oracle can replay.) Seeds sit at
     * distance 0 from themselves; unreached (seed, node) pairs are absent. */
   def seedDistances(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    val en = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val dist = seedDistancesOver(en, seeds, maxHops)
-    en.unpersist()
-    dist
-  }
+      maxHops: Int): DataFrame =
+    distances("seedDistances", unitLength(edges), seeds, maxHops, perSeed = true)
 
-  /** [[seedDistances]] over an edge relation the CALLER has already
-    * src-partitioned and persisted — for queries that run several graph
-    * passes over the same graph (q166 runs this AND the ANF sketches:
-    * sharing one cached relation removes a duplicate scan+shuffle+persist
-    * of the whole edge set — round-16 optimization). The caller owns the
-    * relation's lifecycle. */
-  private[graft] def seedDistancesOver(en: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    require(maxHops >= 0)
-    var dist = seeds.select(col("node")).distinct()
-      .select(col("node").as("seed"), col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var frontier = dist
-    var h = 1
-    var done = maxHops == 0
-    while (!done) {
-      val cand = en.join(frontier, en("src") === frontier("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-      val fresh = cand.join(dist, Seq("seed", "node"), "left_anti")
-        .withColumn("dist", lit(h.toLong)).localCheckpoint()
-      if (fresh.isEmpty) done = true
-      else {
-        dist = dist.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-        h += 1
-        if (h > maxHops) done = true
-      }
-    }
-    dist
+  private def unitLength(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"), lit(1L).as("w"))
+
+  /** The frontier relaxation the distance loops share: Bellman-Ford from
+    * the seeds, relaxing only the out-edges of rows whose distance
+    * improved last round. The state is `([seed,] node, dist, _improved)`.
+    * A round joins the improved rows with the src-keyed edges (co-keyed,
+    * no Exchange), moves the offers `dist + w` to their `node` (the round's
+    * one Exchange) and min-merges them into the state, which is keyed on
+    * `node` already; a row is improved when it is new or its distance
+    * dropped. `perSeed` keeps one distance per (seed, node) pair. */
+  private def distances(loop: String, edges: DataFrame, seeds: DataFrame,
+      rounds: Int, perSeed: Boolean): DataFrame = {
+    require(rounds >= 0)
+    val en = KeyedCheckpoint(edges, "src")
+    val seed = if (perSeed) Seq(col("seed")) else Nil
+    val keys = seed :+ col("node")
+    val init = seeds.select(col("node")).distinct()
+      .select((if (perSeed) Seq(col("node").as("seed")) else Nil) ++
+        Seq(col("node"), lit(0L).as("dist"), lit(true).as("_improved")): _*)
+    iterate(loop, init, rounds, frontier = Some("_improved")) { state =>
+      val f = state.where(col("_improved"))
+      val offers = en.join(f.hint("shuffle_hash"), en("src") === f("node"))
+        .select(seed ++ Seq(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
+          lit(null).cast("long").as("_was")): _*)
+        .repartition(col("node"))
+      state.select(keys ++ Seq(col("dist"), col("dist").as("_was")): _*)
+        .unionByName(offers)
+        .groupBy(keys: _*).agg(min("dist").as("dist"), min("_was").as("_was"))
+        .select(keys ++ Seq(col("dist"),
+          (col("_was").isNull || col("dist") < col("_was")).as("_improved")): _*)
+    }.last.select(keys :+ col("dist"): _*)
   }
 
   /** Bounded harmonic centrality from a deterministic seed sample — the
@@ -307,23 +297,13 @@ object Graph {
     *
     * Returns one frame per hop 1..maxHops: (node, r0..r15). Estimation is
     * the caller's (q163 folds registers into the HLL estimate in integer
-    * units). Scale shape: each round is one join + one 16-max aggregate
-    * over (node, 16×int) rows; lineage localCheckpoints per round. */
+    * units). Scale shape: each round is one co-keyed join and a 16-max
+    * aggregate over (node, 16×int) rows — partial below the round's one
+    * Exchange, final against the node-keyed state. */
   def anfSketches(edges: DataFrame, maxHops: Int): Seq[(Int, DataFrame)] = {
-    val en = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val out = anfSketchesOver(en, maxHops)
-    en.unpersist()
-    out
-  }
-
-  /** [[anfSketches]] over a caller-prepared (src-partitioned, persisted)
-    * edge relation — the q166 sharing companion of [[seedDistancesOver]].
-    * The caller owns the relation's lifecycle. */
-  private[graft] def anfSketchesOver(en: DataFrame,
-      maxHops: Int): Seq[(Int, DataFrame)] = {
     require(maxHops >= 1)
     val M = 16
+    val en = KeyedCheckpoint(edges.select(col("src"), col("dst")), "src")
     val h = PortableSketch.h60(concat(lit("anf:"), col("node").cast("string")))
     val rs = (0 until M).map(i => s"r$i")
     val init = en.select(col("src").as("node"))
@@ -335,18 +315,13 @@ object Graph {
         length(bin(expr("_v & -_v"))).cast("int"))
       .select(col("node") +: (0 until M).map(i =>
         when(col("_b") === i, col("_rank")).otherwise(lit(0)).as(s"r$i")): _*)
-    var sk = init.localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, DataFrame)]
-    for (hh <- 1 to maxHops) {
-      val contrib = en.join(sk, en("src") === sk("node"))
-        .select(col("dst").as("node") +: rs.map(col): _*)
-      sk = sk.unionByName(contrib)
-        .groupBy("node")
-        .agg(max(rs.head).as(rs.head), rs.tail.map(r => max(r).as(r)): _*)
-        .localCheckpoint()
-      out += ((hh, sk))
-    }
-    out.toSeq
+    def merge(df: DataFrame): DataFrame =
+      df.groupBy("node").agg(max(rs.head).as(rs.head), rs.tail.map(r => max(r).as(r)): _*)
+    iterate("anfSketches", init, maxHops) { sk =>
+      merge(merge(en.join(sk.hint("shuffle_hash"), en("src") === sk("node"))
+          .select(col("dst").as("node") +: rs.map(col): _*))
+        .unionByName(sk))
+    }.zipWithIndex.tail.map(_.swap)
   }
 
   /** Bounded weighted shortest path — Bellman-Ford relaxation rounds from a
@@ -366,34 +341,8 @@ object Graph {
     * Precondition: w ≥ 1 (positive lengths — with them, dist values only
     * ever decrease and the merge needs no tie rule beyond min). */
   def weightedDistances(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    require(rounds >= 0)
-    val en = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src")).persist()
-    var dist = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var r = 1
-    var done = rounds == 0
-    while (!done) {
-      val cand = en.join(frontier, en("src") === frontier("node"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("_d"))
-        .groupBy("node").agg(min("_d").as("_d"))
-      val merged = dist.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(coalesce(col("dist"), lit(Long.MaxValue)),
-            coalesce(col("_d"), lit(Long.MaxValue))).as("dist"),
-          (col("_d").isNotNull && (col("dist").isNull || col("_d") < col("dist")))
-            .as("_improved"))
-        .localCheckpoint()
-      frontier = merged.where(col("_improved")).select("node", "dist")
-      dist = merged.select("node", "dist")
-      if (frontier.isEmpty) done = true
-      else { r += 1; if (r > rounds) done = true }
-    }
-    en.unpersist()
-    dist
-  }
+      rounds: Int): DataFrame =
+    distances("weightedDistances", weighted(edges), seeds, rounds, perSeed = false)
 
   /** Synchronous weighted label propagation (community detection): every
     * node starts labeled with itself; each round it adopts the label with
@@ -430,7 +379,7 @@ object Graph {
         .groupBy(col("dst"))
         .agg(expr(s"max_by(lab, ws * $ordBound - lab)").as("lab"))
         .select(col("dst").as("node"), col("lab"))
-    }
+    }.last
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a DIRECTED edge set —
@@ -482,7 +431,7 @@ object Graph {
     val hubs = iterate("hits", srcNodes.withColumn("x", lit(mass / nh)), rounds) { hubs =>
       auths = half(es, "src", "dst", hubs, "authority")
       half(ed, "dst", "src", auths, "hub")
-    }
+    }.last
     hubs.select(lit("hub").as("side"), col("node"), col("x").as("score_u"))
       .unionByName(auths.select(lit("auth").as("side"), col("node"),
         col("x").as("score_u")))
@@ -588,41 +537,32 @@ object Graph {
     * trace shows equal tail rows, so convergence is VISIBLE in the output
     * rather than assumed.
     *
-    * Scale shape: each round is one degree aggregation plus two left-semi
-    * joins against the surviving-node relation — work ∝ current |edges|,
-    * monotonically shrinking; the edge set is eagerly localCheckpoint'ed
-    * every round (the pageRank lineage discipline), and per-round stats are
-    * one-row aggregates UNIONed, never collected. Nodes are counted from
-    * the degree relation, so isolated nodes drop with their last edge —
-    * the standard subgraph-of-the-edge-set convention. */
+    * Scale shape: the state is the degree relation `(node, d)` on
+    * [[iterate]]; the edges are kept in both directions, keyed on `src`,
+    * so round 0's degrees are a local count. A round keeps the edges whose
+    * `src` survives (a co-keyed semi-join), moves them to their `dst` (the
+    * round's one Exchange) for the second semi-join, and counts them per
+    * `dst` — by symmetry, each surviving node's new degree, already keyed.
+    * Per-round stats are one-row aggregates over the states, UNIONed, never
+    * collected. Nodes are counted from the degree relation, so isolated
+    * nodes drop with their last edge — the standard
+    * subgraph-of-the-edge-set convention. */
   def kCoreTrace(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1)
-    // one degree relation per round, PERSISTED (not checkpointed — an eager
-    // checkpoint per round measured slower, 6.4→7.2 s, because its 7 extra
-    // materialization jobs outweigh the saved re-aggregation): it is read
-    // by BOTH the round's stats aggregate and the NEXT round's keep filter,
-    // which previously re-aggregated degrees(e_r) from scratch twice per
-    // round (round-16 optimization; one (node, long) row per node; lineage
-    // is one agg over the checkpointed edge set, so no truncation needed).
-    // Ownership: Verify/Bench clear the cache after each query's action.
+    val es = KeyedCheckpoint(edges.select(col("u").as("src"), col("v").as("dst"))
+      .unionByName(edges.select(col("v").as("src"), col("u").as("dst"))), "src")
     def stats(r: Int, deg: DataFrame): DataFrame =
       deg.agg(count(lit(1)).as("n_nodes"),
           // integer div: sum(d) is exactly 2·|edges|; float division would
           // lose exactness past 2^53 summed degree at full scale
           expr("coalesce(sum(d), 0L) div 2").as("n_edges"))
         .select(lit(r).cast("long").as("round"), col("n_nodes"), col("n_edges"))
-    var e = edges.select(col("u"), col("v")).localCheckpoint()
-    var deg = degrees(e).persist()
-    var out = stats(0, deg)
-    for (r <- 1 to rounds) {
-      val keep = deg.where(col("d") >= k).select(col("n"))
-      e = e.join(keep.withColumnRenamed("n", "u"), Seq("u"), "left_semi")
-        .join(keep.withColumnRenamed("n", "v"), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint()
-      deg = degrees(e).persist()
-      out = out.unionAll(stats(r, deg))
-    }
-    out
+    val init = es.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
+    iterate("kCoreTrace", init, rounds) { deg =>
+      val keep = deg.where(col("d") >= k)
+      es.join(keep.select(col("node").as("src")).hint("shuffle_hash"), Seq("src"), "left_semi")
+        .join(keep.select(col("node").as("dst")).hint("shuffle_hash"), Seq("dst"), "left_semi")
+        .groupBy(col("dst").as("node")).agg(count(lit(1)).as("d"))
+    }.zipWithIndex.map { case (deg, r) => stats(r, deg) }.reduce(_ union _)
   }
 }

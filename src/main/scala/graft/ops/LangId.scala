@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
 import org.apache.spark.sql.functions._
 
 /** Language identification — the classifier that DERIVES the `lang` column
@@ -179,8 +179,7 @@ object LangId {
     * `min(1::BIGINT << g) ≥ count(*)` CTE in the q158/q169 oracles. */
   def predict(docs: DataFrame, textCol: String, idCol: String, n: Int,
       model: DataFrame, langStats: DataFrame): DataFrame = {
-    val predCol = predictColumn(docs.sparkSession, col(textCol), n,
-      model, langStats)
+    val predCol = predictColumn(col(textCol), n, model, langStats)
     // null-text docs produce zero gram rows in the reference formulation
     // and so vanish from its doc-keyed aggregate — the filter reproduces
     // that contract on the map-only path. idCol is unique per row (the
@@ -194,8 +193,8 @@ object LangId {
     * ONE codegen projection — no gram explode, no broadcast join, no
     * doc-keyed aggregate. Exposed so compositions (q169) can annotate
     * their frame in place instead of joining predictions back on the id. */
-  def predictColumn(spark: org.apache.spark.sql.SparkSession, text: Column,
-      n: Int, model: DataFrame, langStats: DataFrame): Column = {
+  def predictColumn(text: Column, n: Int, model: DataFrame,
+      langStats: DataFrame): Column = {
     val stats = langStats.select("lang", "lang_idx", "prior_u", "oov_llu")
       .collect().sortBy(_.getLong(1))
     require(stats.nonEmpty, "langId.predict: empty model")
@@ -210,8 +209,7 @@ object LangId {
       arr(idx(r.getString(1))) = r.getLong(2)
     }
     val data = graft.expr.LangIdModel.build(langs, priorU, oov, mult, grouped)
-    graft.expr.GraftFunctions.bindExpr(spark, "langid_pred",
-      args => graft.expr.LangIdPredict(args.head, n, data), text)
+    ExpressionColumn(graft.expr.LangIdPredict(ExpressionColumn.expression(text), n, data))
   }
 
   /** The expression-tree reference formulation of [[predict]] (gram-count

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.expr.{GramOverlapMax, GraftFunctions, ProbeGramIndex}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.expr.{GramOverlapMax, ProbeGramIndex}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
 import org.apache.spark.sql.functions._
 
 /** Streaming benchmark decontamination — the ingest-time counterpart of the
@@ -44,18 +44,15 @@ object StreamingDecontam {
   }
 
   /** The screening column: max distinct-gram overlap against any probe. The
-    * index rides inside the expression (serialized with the plan); the
-    * registry binding only routes Column→Expression. */
-  def maxSharedCol(spark: SparkSession, text: Column, n: Int,
-      index: ProbeGramIndex): Column =
-    GraftFunctions.bindExpr(spark, "gram_overlap",
-      args => GramOverlapMax(args.head, n, index), text)
+    * index rides inside the expression (serialized with the plan). */
+  def maxSharedCol(text: Column, n: Int, index: ProbeGramIndex): Column =
+    ExpressionColumn(GramOverlapMax(ExpressionColumn.expression(text), n, index))
 
   /** Annotate each (static or streaming) document with its overlap count. */
   def annotate(docs: DataFrame, index: ProbeGramIndex,
       textCol: String = "text", n: Int = 3): DataFrame =
     docs.withColumn("max_shared",
-      maxSharedCol(docs.sparkSession, col(textCol), n, index))
+      maxSharedCol(col(textCol), n, index))
 
   /** The gate: only documents below the contamination threshold flow
     * downstream (the arriving-corpus side of the q51 rule). */

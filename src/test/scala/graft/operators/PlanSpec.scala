@@ -19,7 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
   /** Plan traversal that descends into adaptive plans and query stages. */
-  private object AQEPlans extends AdaptiveSparkPlanHelper
+  private object AQEPlans extends AdaptiveSparkPlanHelper {
+    /** Children, looking into adaptive plans and query stages. */
+    def kids(p: SparkPlan): Seq[SparkPlan] = allChildren(p)
+  }
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(df: DataFrame): String =
@@ -581,6 +584,48 @@ class PlanSpec extends AnyFunSuite {
       val x = assertOneExchange(p, "dst")
       assert(AQEPlans.collect(p) { case h: HashAggregateExec => h }.size == 4, s"\n$p")
       assert(AQEPlans.find(x.child)(_.isInstanceOf[HashAggregateExec]).isEmpty, s"\n$p")
+    }
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  /** The operators from `p` down to the src-keyed edge checkpoint (the
+    * leaf with `src` and `dst` columns), unless a join comes first. */
+  private def edgePath(p: SparkPlan): Option[List[SparkPlan]] = p match {
+    case _: BaseJoinExec => None
+    case _ if AQEPlans.kids(p).isEmpty =>
+      if (Set("src", "dst").subsetOf(p.output.map(_.name).toSet)) Some(List(p)) else None
+    case _ => AQEPlans.kids(p).iterator.map(edgePath).collectFirst { case Some(path) => p :: path }
+  }
+
+  /** A round joins the src-keyed edges where they lie: no Exchange and no
+    * broadcast between the edge checkpoint and the join that reads it.
+    * Nothing else in the round is broadcast either (the state is keyed
+    * like the edges), and the round sorts nothing. */
+  private def assertEdgesReadInPlace(p: SparkPlan): Unit = {
+    val paths = AQEPlans.collect(p) { case j: BaseJoinExec => j.children.flatMap(edgePath) }.flatten
+    assert(paths.nonEmpty, s"no join reads the edges\n$p")
+    paths.foreach(path => assert(!path.exists {
+      case _: ShuffleExchangeExec | _: BroadcastExchangeExec => true
+      case _ => false
+    }, s"the edges must be joined where they are keyed\n$p"))
+    assert(AQEPlans.collect(p) { case b: BroadcastExchangeExec => b }.isEmpty, s"no broadcast\n$p")
+    assert(AQEPlans.collect(p) { case s: SortExec => s }.isEmpty, s"no sort\n$p")
+  }
+
+  test("graph rounds: the frontier loops and the ANF sketches join the src-keyed " +
+      "edges where they lie, broadcast nothing and sort nothing " +
+      "(bfsDistances, seedDistances, weightedDistances, anfSketches under the session's config)") {
+    import spark.implicits._
+    val seeds = Seq(1L, 2L).toDF("node")
+    val loops = Seq(
+      "bfsDistances" -> (() => graft.ops.Graph.bfsDistances(roundEdges, seeds, 3).collect()),
+      "seedDistances" -> (() => graft.ops.Graph.seedDistances(roundEdges, seeds, 3).collect()),
+      "weightedDistances" -> (() => graft.ops.Graph.weightedDistances(roundEdges, seeds, 3).collect()),
+      "anfSketches" -> (() => graft.ops.Graph.anfSketches(roundEdges, 2).foreach(_._2.collect())))
+    for ((loop, run) <- loops) {
+      val rounds = roundPlans(run())
+      assert(rounds.nonEmpty, s"$loop: no round plan captured")
+      rounds.foreach(assertEdgesReadInPlace)
     }
     spark.sharedState.cacheManager.clearCache()
   }

@@ -157,6 +157,78 @@ class GraphSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("bfsDistances: the loop ends at the first round that reaches nothing new; " +
+      "its jobs carry only \"Graph.bfsDistances rN\", N <= 3; the caller's description is restored") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        seen.add(j.jobId -> String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    // chain a-b-c seeded at a: round 1 reaches b, round 2 reaches c, round 3
+    // reaches nothing new, so 97 of the 100 allowed hops never run
+    val edges = Seq(("a", "b"), ("b", "c"))
+      .flatMap { case (u, v) => Seq((u, v, 1L), (v, u, 1L)) }.toDF("src", "dst", "w")
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller job")
+    try {
+      val dist = Graph.bfsDistances(edges, Seq("a").toDF("node"), 100)
+      assert(sc.getLocalProperty("spark.job.description") == "caller job")
+      assert(dist.as[(String, Long)].collect().toMap == Map("a" -> 0L, "b" -> 1L, "c" -> 2L))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq.sortBy(_._1).map(_._2)
+    val rounds = descs.filter(_ != "caller job")
+    val k = rounds.distinct.size
+    assert(k >= 1 && k <= 3 && rounds.distinct == (1 to k).map(r => s"Graph.bfsDistances r$r"),
+      s"every other job runs under the caller's description: $descs")
+    assert(rounds == rounds.sorted, s"rounds out of order: $descs")
+    spark.sharedState.cacheManager.clearCache()
+  }
+
+  /** Plain-Scala multi-source BFS: hop layers from the seed set, bounded. */
+  private def refBfs(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxHops: Int): Map[Long, Long] = {
+    val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var dist = seeds.map(_ -> 0L).toMap
+    var frontier = seeds.toSet
+    for (h <- 1 to maxHops if frontier.nonEmpty) {
+      frontier = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(dist.contains)
+      dist ++= frontier.map(_ -> h.toLong)
+    }
+    dist
+  }
+
+  test("bfsDistances property: 25 random digraphs match the plain-Scala " +
+      "multi-source BFS (seeds off the graph, hop bound 0 included)") {
+    val rnd = new scala.util.Random(134)
+    for (trial <- 1 to 25) {
+      val n = 3 + rnd.nextInt(10)
+      val edges = (for {
+        u <- 0L until n.toLong; v <- 0L until n.toLong
+        if u != v && rnd.nextInt(4) == 0
+      } yield (u, v)).toSeq
+      // two ids past the node range: seeds that have no edges
+      val seeds = (0L until n + 2L).filter(_ => rnd.nextInt(4) == 0) match {
+        case s if s.nonEmpty => s
+        case _ => Seq(0L)
+      }
+      val hops = rnd.nextInt(6)
+      val got = Graph.bfsDistances(
+          edges.map { case (u, v) => (u, v, 1L) }.toDF("src", "dst", "w"),
+          seeds.toDF("node"), hops)
+        .as[(Long, Long)].collect().toMap
+      assert(got == refBfs(edges, seeds, hops),
+        s"trial $trial seeds=$seeds hops=$hops edges=$edges")
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
   test("seedDistances: per-seed layers (no min-merge), bound, self at 0") {
     val chain = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("p", "q"))
     val edges = chain.flatMap { case (u, v) => Seq((u, v, 1L), (v, u, 1L)) }

@@ -40,6 +40,28 @@ class LangIdSpec extends AnyFunSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("binding the fused scorers leaves the function registry alone " +
+      "(LangId.predictColumn and StreamingDecontam.maxSharedCol, 5 builds each)") {
+    val train = Seq(("xx", "aaa bbb aaa"), ("yy", "zzz yyy zzz")).toDF("lang", "text")
+    val (model, stats) = LangId.fit(train, "text", "lang", n = 3)
+    val idx = graft.streaming.StreamingDecontam.probeIndex(
+      Seq("aaa bbb aaa ccc").toDF("text"), "text", n = 3)
+    val docs = Seq("aaa bbb aaa ccc ddd", "zzz yyy zzz").toDF("text")
+    def build(): Seq[(String, Int)] =
+      docs.select(LangId.predictColumn(col("text"), 3, model, stats),
+          graft.streaming.StreamingDecontam.maxSharedCol(col("text"), 3, idx))
+        .as[(String, Int)].collect().toSeq
+    val registry = spark.sessionState.functionRegistry
+    // the first build settles whatever the session registers once
+    val first = build()
+    assert(first == Seq(("xx", 2), ("yy", 0)), first)
+    val before = registry.listFunction().size
+    for (_ <- 1 to 5) assert(build() == first)
+    assert(registry.listFunction().size == before,
+      "each binding must not leave a session function behind")
+    spark.sharedState.cacheManager.clearCache()
+  }
+
   test("prediction key is tie-free: identical scores resolve by language " +
       "index, never arbitrarily") {
     // two languages with IDENTICAL training text → identical likelihoods
