@@ -1,31 +1,9 @@
 package graft
 
+import graft.model.{DependencyLink, Span}
 import graft.pipeline.{Admission, LinkJob}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** CLI for the dependency-link job (the reference's main() analogue —
-  * main/.../ZipkinDependenciesJob.java:21-87, re-expressed as explicit flags
-  * instead of env vars):
-  *
-  *   runMain graft.Main --day 2025-08-11 --in spans.jsonl --out /path/links \
-  *     [--backfill yyyy-MM-dd..yyyy-MM-dd] \
-  *     [--admission index-day|per-span-window|root-in-window] \
-  *     [--strict-trace-id] [--master local[N]] \
-  *     [--format json-v2|v1-rows] [--stream]
-  *
-  * --backfill runs the same per-day job for every day of the inclusive
-  * range (oldest first) — the reference's cron re-run model as one command;
-  * day-partition overwrite makes each day idempotent.
-  *
-  * --format v1-rows reads a parquet of tall Zipkin v1 annotation rows (the
-  * MySQL-path input shape, SURVEY §2.2) and reconstructs spans via
-  * conditional aggregation before linking. --format v1-tables reads the two
-  * raw v1 tables (--in-spans, --in-annotations parquet of zipkin_spans /
-  * zipkin_annotations shape) and performs the reference's pushdown join in
-  * Spark before the same fold (M1). --stream runs the Structured
-  * Streaming session-gap pipeline over the input with an available-now
-  * trigger (file source), writing link deltas.
-  */
 /** Env-level config parity with the reference launcher
   * (main/.../ZipkinDependenciesJob.java:21-87), resolved as pure data so
   * MainSpec can pin the dispatch rules:
@@ -52,7 +30,18 @@ object MainConfig {
   final case class Resolved(
       day: String, format: String, admission: Admission, strict: Boolean,
       sparkConf: Seq[(String, String)], logLevel: String,
-      master: String = "local[4]")
+      master: String = "local[4]", outFormat: String = "parquet")
+
+  /** The span sources `--format` selects; `Main.dispatch` has one case each. */
+  val formats: Seq[String] = Seq(
+    "json-v2", "csv", "v1-rows", "v1-tables", "v1-jdbc", "es-scroll", "c3-span-table", "c3-cql")
+
+  /** The codecs `--out-format` selects for the day-partitioned link table. */
+  val outFormats: Seq[String] = Seq("parquet", "orc", "json", "csv")
+
+  private def oneOf(flag: String, value: String, valid: Seq[String]): Either[String, String] =
+    if (valid.contains(value)) Right(value)
+    else Left(s"unknown --$flag $value (${valid.mkString("|")})")
 
   /** The reference's MySQL JDBC URL, built from its env surface
     * (MySQLDependenciesJob.java:42-48 defaults, :150-155 URL shape):
@@ -94,7 +83,7 @@ object MainConfig {
 
   /** Reference parse: split(",", -1) then split("=", -1), keep len==2. */
   def parseSparkConf(raw: String): Seq[(String, String)] =
-    if (raw == null || raw.isEmpty || !raw.contains("=")) Nil
+    if (raw == null || !raw.contains("=")) Nil
     else raw.split(",", -1).toSeq.flatMap { pair =>
       pair.split("=", -1) match {
         case Array(k, v) => Some(k -> v)
@@ -147,9 +136,11 @@ object MainConfig {
         catch { case _: java.time.format.DateTimeParseException =>
           Left(s"--day must be yyyy-MM-dd, got: $day") })
       admission <- admissionOf(opts.getOrElse("admission", p._2))
+      format <- oneOf("format", opts.getOrElse("format", p._1), formats)
+      outFormat <- oneOf("out-format", opts.getOrElse("out-format", "parquet"), outFormats)
     } yield Resolved(
       day = day,
-      format = opts.getOrElse("format", p._1),
+      format = format,
       admission = admission,
       // STRICT_TRACE_ID parity (CassandraDependenciesJob.java:65): the
       // reference's env-only cron defaults to strict=TRUE, so a backend
@@ -170,10 +161,38 @@ object MainConfig {
       // reference defaults to local[*]; the engine's default stays the
       // CPU-pinned local so the test/driver budget is explicit.
       master = opts.getOrElse("master", env.getOrElse("SPARK_MASTER",
-        s"local[${env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")))
+        s"local[${env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")),
+      outFormat = outFormat)
   }
 }
 
+/** CLI for the dependency-link job (the reference's main() analogue —
+  * main/.../ZipkinDependenciesJob.java:21-87, re-expressed as explicit flags
+  * instead of env vars):
+  *
+  *   runMain graft.Main --day 2025-08-11 --in spans.jsonl --out /path/links \
+  *     [--backfill yyyy-MM-dd..yyyy-MM-dd] \
+  *     [--admission index-day|per-span-window|root-in-window] \
+  *     [--strict-trace-id] [--master local[N]] \
+  *     [--format <one of MainConfig.formats>] [--out-format parquet|orc|json|csv] \
+  *     [--es-bulk] [--cql-write] [--jdbc-write] [--stream]
+  *
+  * Every format is a source that yields the day's `Dataset[Span]`; one
+  * `LinkJob.runDay` links, counts and writes it, and the requested
+  * write-backs run when the day has links. --backfill runs the same per-day
+  * job for every day of the inclusive range (oldest first) — the
+  * reference's cron re-run model as one command; day-partition overwrite
+  * makes each day idempotent.
+  *
+  * --format v1-rows reads a parquet of tall Zipkin v1 annotation rows (the
+  * MySQL-path input shape, SURVEY §2.2) and reconstructs spans via
+  * conditional aggregation before linking. --format v1-tables reads the two
+  * raw v1 tables (--in-spans, --in-annotations parquet of zipkin_spans /
+  * zipkin_annotations shape) and performs the reference's pushdown join in
+  * Spark before the same fold (M1). --stream runs the Structured
+  * Streaming session-gap pipeline over the input with an available-now
+  * trigger (file source), writing link deltas.
+  */
 object Main {
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
@@ -191,15 +210,10 @@ object Main {
     resolved.sparkConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(resolved.logLevel)
-    graft.expr.GraftFunctions.ensureRegistered(spark)
     try dispatch(spark, opts, resolved)
     finally spark.stop()
   }
 
-  /** Full post-session CLI dispatch (format fan-out, admission, sinks,
-    * backfill) — separated from main so MainSpec can drive a backend
-    * profile end-to-end against the shared test session; main owns and
-    * stops its own session, which a test must never do. */
   /** Env-only write-back: the reference's cron jobs always save links to
     * the storage they read with zero flags; `GRAFT_WRITE_BACK=1` (or true)
     * recovers that — it enables the backend write flag matching
@@ -219,170 +233,129 @@ object Main {
     }
   }
 
-  /** `env` defaults to the process env in main's call; tests and embedders
-    * pass their own map, so dispatch behavior never depends on a stray
-    * variable in the host environment (the GRAFT_WRITE_BACK hazard). */
+  /** Full post-session CLI dispatch (source choice, admission, sinks,
+    * backfill) — separated from main so MainSpec can drive a backend
+    * profile end-to-end against the shared test session; main owns and
+    * stops its own session, which a test must never do. `env` defaults to
+    * the process env in main's call; tests and embedders pass their own
+    * map, so dispatch behavior never depends on a stray variable in the
+    * host environment (the GRAFT_WRITE_BACK hazard). */
   private[graft] def dispatch(spark: SparkSession, rawOpts: Map[String, String],
       resolved: MainConfig.Resolved, env: Map[String, String] = sys.env): Unit = {
     val opts = writeBackFlags(env) ++ rawOpts
-    val day = resolved.day
-    val admission = resolved.admission
     def req(k: String): String = opts.getOrElse(k,
       { System.err.println(s"missing required --$k\n$usage"); sys.exit(2) })
-    if (opts.contains("stream")) runStreaming(spark, opts, day)
+    if (opts.contains("stream"))
+      runStreaming(spark, req("in"), req("out"),
+        opts.getOrElse("gap-minutes", "10").toInt, resolved.strict)
     else {
-      val strict = resolved.strict
-      def runOneDay(d: String): Unit = {
-          val outFmt = opts.getOrElse("out-format", "parquet")
-          if (!Set("parquet", "orc", "json", "csv")(outFmt)) {
-            System.err.println(s"unknown --out-format $outFmt (parquet|orc|json|csv)"); sys.exit(2)
-          }
-          // STORAGE_TYPE=mysql upgrades the fixture two-table read to the
-          // live partitioned-JDBC source (same fold + linker) whenever a
-          // JDBC URL resolves — from --jdbc-url, GRAFT_JDBC_URL, or the
-          // reference's MYSQL_* env surface — so the env-only docker
-          // entrypoint (`STORAGE_TYPE=mysql bin/graft-today`) reads the
-          // live store with zero flags, like the reference.
-          val envJdbcUrl = MainConfig.jdbcUrl(opts, env)
-          val effFormat =
-            if (resolved.format == "v1-tables" && envJdbcUrl.isDefined) "v1-jdbc"
-            else resolved.format
-          val links = effFormat match {
-            case "json-v2" =>
-              LinkJob.runDay(spark, req("in"), req("out"), d, admission, strict, outFmt)
-            case "csv" =>
-              val linked = LinkJob.linkSpans(
-                LinkJob.readCsvSpans(spark, req("in")), d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "v1-rows" =>
-              val (lo, hi) = LinkJob.dayWindowMicros(d)
-              val spans = graft.codec.V1SpanFold.foldWindow(
-                spark.read.parquet(req("in")), lo, hi)
-              // the fold already applied the day window at the scan, so
-              // PerSpanWindow (the mysql profile default) is a no-op here;
-              // an explicit --admission root-in-window must still take effect
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "v1-jdbc" =>
-              // live v1 SQL store via partitioned JDBC (fixes the
-              // reference's single-connection read — see JdbcV1Source)
-              val (lo, hi) = LinkJob.dayWindowMicros(d)
-              val cfg = graft.sources.JdbcV1Config.fromEnv(
-                url = envJdbcUrl.getOrElse(req("jdbc-url")),
-                numPartitions = opts.getOrElse("jdbc-partitions",
-                  env.getOrElse("SPARK_GRAFT_CPUS", "4")).toInt,
-                env = env).copy(
-                spansTable = opts.getOrElse("jdbc-spans-table", "zipkin_spans"),
-                annotationsTable = opts.getOrElse("jdbc-annotations-table", "zipkin_annotations"))
-              val spans = graft.sources.JdbcV1Source.spansWindow(spark, cfg, lo, hi)
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "v1-tables" =>
-              // M1: the two-table v1 ingest (zipkin_spans ⟕ zipkin_annotations)
-              val (lo, hi) = LinkJob.dayWindowMicros(d)
-              val spans = graft.codec.V1SpanFold.fromV1Tables(
-                spark.read.parquet(req("in-spans")),
-                spark.read.parquet(req("in-annotations")), lo, hi)
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "es-scroll" =>
-              // live ES/OS daily-index read via sliced scroll over the JDK
-              // transport (missing index => empty day, like the reference)
-              val esm = esEnv(opts, env)
-              val cfg = graft.sources.EsSpanSource.ScrollConfig(
-                graft.util.EsFlavor.esConf(esm),
-                slices = opts.getOrElse("es-slices",
-                  env.getOrElse("SPARK_GRAFT_CPUS", "4")).toInt,
-                dateSeparator = esm.getOrElse("ES_DATE_SEPARATOR", "-"))
-              val spans = graft.sources.EsSpanSource.readDay(spark, cfg, d)
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "c3-span-table" =>
-              // Cassandra-v3-shaped token-range source (fixture-backed
-              // transport; ring split + decode are the real thing)
-              val cfg = graft.sources.CassandraV3Source.fromEnv(env,
-                numRanges = opts.getOrElse("c3-ranges", "32").toInt)
-              val spans = graft.sources.CassandraV3Source.spans(spark, req("in"), cfg)
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case "c3-cql" =>
-              // LIVE Cassandra read over the in-house CQL v4 client: one
-              // token range per task, contact points / keyspace / creds
-              // from the reference's CASSANDRA_* env surface
-              val c3m = env ++
-                opts.get("c3-contact-points").map("CASSANDRA_CONTACT_POINTS" -> _)
-              val cfg = graft.sources.CassandraV3Source.fromEnv(c3m,
-                numRanges = opts.getOrElse("c3-ranges", "32").toInt)
-              val spans = graft.sources.CassandraV3Source.liveSpans(spark, cfg)
-              val linked = LinkJob.linkSpans(spans, d, admission, strict).persist()
-              if (!linked.isEmpty) LinkJob.writeLinks(linked, d, req("out"), outFmt)
-              linked
-            case other =>
-              System.err.println(s"unknown --format $other (json-v2|csv|v1-rows|v1-tables|v1-jdbc|c3-span-table|c3-cql|es-scroll)"); sys.exit(2)
-          }
-          val n = links.count()
-          // --es-bulk: additionally push the day's links to a live ES/OS
-          // cluster via the bulk-upsert sink (id=parent|child overwrite
-          // semantics — ElasticsearchDependenciesJob.java:198-221). Hosts /
-          // index / credentials come from the reference's env surface
-          // (ES_HOSTS, ES_INDEX, ES_USERNAME, ES_PASSWORD,
-          // ES_DATE_SEPARATOR), --es-hosts overriding ES_HOSTS.
-          if (opts.contains("es-bulk")) {
-            val esm = esEnv(opts, env)
-            if (n > 0) graft.sinks.EsBulkSink.writeLinks(
-              links, d, graft.util.EsFlavor.esConf(esm),
-              dateSeparator = esm.getOrElse("ES_DATE_SEPARATOR", "-"))
-            else println(s"day=$d no links; skipping ES bulk write")
-          }
-          // --cql-write: additionally save the day's links to a live
-          // Cassandra `dependency` table over the in-house CQL transport
-          // (INSERT day,parent,child,calls[,errors] — the reference's save,
-          // CassandraDependenciesJob.java:193-209; C* upsert on the
-          // (day,parent,child) key makes re-runs idempotent). Contact
-          // points / keyspace / creds from the CASSANDRA_* env surface,
-          // --c3-contact-points overriding, same as the read path.
-          if (opts.contains("cql-write")) {
-            val c3m = env ++
-              opts.get("c3-contact-points").map("CASSANDRA_CONTACT_POINTS" -> _)
-            if (n > 0) graft.sinks.CqlLinkSink.writeLinks(
-              links, d, graft.sources.CassandraV3Source.fromEnv(c3m))
-            else println(s"day=$d no links; skipping CQL write")
-          }
-          // --jdbc-write: additionally save the day's links to a live SQL
-          // store — the reference's REPLACE INTO zipkin_dependencies
-          // (MySQLDependenciesJob.java:241-255), distributed per-partition.
-          // URL resolves like the read path (--jdbc-url > GRAFT_JDBC_URL >
-          // MYSQL_* env), creds from MYSQL_USER / MYSQL_PASS;
-          // --jdbc-dialect (or GRAFT_JDBC_DIALECT env for flag-less runs)
-          // standard swaps REPLACE for the ANSI delete-day-then-insert.
-          if (opts.contains("jdbc-write")) {
-            if (n > 0) graft.sinks.JdbcLinkSink.writeLinks(
-              links, d, envJdbcUrl.getOrElse(req("jdbc-url")),
-              properties = Seq(
-                env.get("MYSQL_USER").map("user" -> _),
-                env.get("MYSQL_PASS").map("password" -> _)).flatten.toMap,
-              dialect = opts.getOrElse("jdbc-dialect",
-                env.getOrElse("GRAFT_JDBC_DIALECT", "mysql")))
-            else println(s"day=$d no links; skipping JDBC write")
-          }
-          println(s"day=$d links=$n out=${req("out")}")
-          links.orderBy("parent", "child").show(100, truncate = false)
-          links.unpersist()
+      val days = opts.get("backfill") match {
+        case Some(range) => MainConfig.parseBackfill(range) match {
+          case Right(ds) => ds
+          case Left(err) => System.err.println(s"$err\n$usage"); sys.exit(2)
         }
-        opts.get("backfill") match {
-          case Some(range) => MainConfig.parseBackfill(range) match {
-            case Right(days) => days.foreach(runOneDay)
-            case Left(err) => System.err.println(s"$err\n$usage"); sys.exit(2)
-          }
-          case None => runOneDay(day)
+        case None => Seq(resolved.day)
+      }
+      // The ES and Cassandra env surfaces with their CLI overrides; a run's
+      // read and its write-back resolve their transports from the same config.
+      val esm = esEnv(opts, env)
+      lazy val c3Config = graft.sources.CassandraV3Source.fromEnv(
+        env ++ opts.get("c3-contact-points").map("CASSANDRA_CONTACT_POINTS" -> _),
+        numRanges = opts.getOrElse("c3-ranges", "32").toInt)
+      // STORAGE_TYPE=mysql upgrades the fixture two-table read to the live
+      // partitioned-JDBC source (same fold + linker) whenever a JDBC URL
+      // resolves — from --jdbc-url, GRAFT_JDBC_URL, or the reference's
+      // MYSQL_* env surface — so the env-only docker entrypoint
+      // (`STORAGE_TYPE=mysql bin/graft-today`) reads the live store with zero
+      // flags, like the reference.
+      val jdbcUrl = MainConfig.jdbcUrl(opts, env)
+      val format =
+        if (resolved.format == "v1-tables" && jdbcUrl.isDefined) "v1-jdbc" else resolved.format
+
+      def spansOf(day: String): Dataset[Span] = {
+        val (lo, hi) = LinkJob.dayWindowMicros(day)
+        format match {
+          case "json-v2" => LinkJob.readJsonV2(spark, req("in"))
+          case "csv" => LinkJob.readCsvSpans(spark, req("in"))
+          // the v1 folds apply the day window at the scan, so PerSpanWindow
+          // (the mysql profile default) is a no-op after them; an explicit
+          // --admission root-in-window still takes effect
+          case "v1-rows" =>
+            graft.codec.V1SpanFold.foldWindow(spark.read.parquet(req("in")), lo, hi)
+          case "v1-tables" => // M1: zipkin_spans ⟕ zipkin_annotations
+            graft.codec.V1SpanFold.fromV1Tables(spark.read.parquet(req("in-spans")),
+              spark.read.parquet(req("in-annotations")), lo, hi)
+          case "v1-jdbc" =>
+            // live v1 SQL store via partitioned JDBC (fixes the reference's
+            // single-connection read — see JdbcV1Source)
+            val cfg = graft.sources.JdbcV1Config.fromEnv(
+              url = jdbcUrl.getOrElse(req("jdbc-url")),
+              numPartitions = opts.getOrElse("jdbc-partitions",
+                env.getOrElse("SPARK_GRAFT_CPUS", "4")).toInt,
+              env = env).copy(
+              spansTable = opts.getOrElse("jdbc-spans-table", "zipkin_spans"),
+              annotationsTable = opts.getOrElse("jdbc-annotations-table", "zipkin_annotations"))
+            graft.sources.JdbcV1Source.spansWindow(spark, cfg, lo, hi)
+          case "es-scroll" =>
+            // live ES/OS daily-index read via sliced scroll over the JDK
+            // transport (missing index => empty day, like the reference)
+            graft.sources.EsSpanSource.readDay(spark,
+              graft.sources.EsSpanSource.ScrollConfig(graft.util.EsFlavor.esConf(esm),
+                slices = opts.getOrElse("es-slices", env.getOrElse("SPARK_GRAFT_CPUS", "4")).toInt,
+                dateSeparator = esm.getOrElse("ES_DATE_SEPARATOR", "-")),
+              day)
+          case "c3-span-table" =>
+            // Cassandra-v3-shaped token-range source (fixture-backed
+            // transport; ring split + decode are the real thing)
+            graft.sources.CassandraV3Source.spans(spark, req("in"), c3Config)
+          case "c3-cql" =>
+            // LIVE Cassandra read over the in-house CQL v4 client: one token
+            // range per task, contact points / keyspace / creds from the
+            // reference's CASSANDRA_* env surface
+            graft.sources.CassandraV3Source.liveSpans(spark, c3Config)
+          case other => throw new IllegalArgumentException(
+            s"unknown --format $other (${MainConfig.formats.mkString("|")})")
         }
       }
+
+      // The requested write-backs, each saving a day's links to a live store
+      // besides the `--out` table; each is an idempotent upsert, so re-running
+      // a day is safe.
+      def writeBack(flag: String, links: Dataset[DependencyLink], day: String): Unit = flag match {
+        case "es-bulk" =>
+          // ES/OS bulk upsert, id=parent|child (ElasticsearchDependenciesJob
+          // .java:198-221); hosts / index / creds from ES_HOSTS, ES_INDEX,
+          // ES_USERNAME, ES_PASSWORD, ES_DATE_SEPARATOR
+          graft.sinks.EsBulkSink.writeLinks(links, day, graft.util.EsFlavor.esConf(esm),
+            dateSeparator = esm.getOrElse("ES_DATE_SEPARATOR", "-"))
+        case "cql-write" =>
+          // INSERT day,parent,child,calls[,errors] into the Cassandra
+          // `dependency` table (CassandraDependenciesJob.java:193-209)
+          graft.sinks.CqlLinkSink.writeLinks(links, day, c3Config)
+        case "jdbc-write" =>
+          // the reference's REPLACE INTO zipkin_dependencies
+          // (MySQLDependenciesJob.java:241-255), distributed per partition;
+          // --jdbc-dialect (or GRAFT_JDBC_DIALECT) standard swaps REPLACE for
+          // the ANSI delete-day-then-insert
+          graft.sinks.JdbcLinkSink.writeLinks(links, day, jdbcUrl.getOrElse(req("jdbc-url")),
+            properties = Seq(
+              env.get("MYSQL_USER").map("user" -> _),
+              env.get("MYSQL_PASS").map("password" -> _)).flatten.toMap,
+            dialect = opts.getOrElse("jdbc-dialect", env.getOrElse("GRAFT_JDBC_DIALECT", "mysql")))
+      }
+      val writeBacks = Seq("es-bulk", "cql-write", "jdbc-write").filter(opts.contains)
+
+      days.foreach { d =>
+        val (links, n) = LinkJob.runDay(spansOf(d), d, req("out"),
+          resolved.admission, resolved.strict, resolved.outFormat)
+        if (n > 0) writeBacks.foreach(writeBack(_, links, d))
+        else if (writeBacks.nonEmpty)
+          println(s"day=$d no links; skipping ${writeBacks.map("--" + _).mkString(" ")}")
+        println(s"day=$d links=$n out=${req("out")}")
+        links.orderBy("parent", "child").show(100, truncate = false)
+        links.unpersist()
+      }
+    }
   }
 
   /** The ES env surface with CLI overrides folded in: `--es-hosts` wins over
@@ -394,34 +367,39 @@ object Main {
     env ++ opts.get("es-hosts").map("ES_HOSTS" -> _) ++
       opts.get("es-timeout").map("ES_TIMEOUT" -> _)
 
-  private def runStreaming(spark: SparkSession, opts: Map[String, String], day: String): Unit = {
-    def req(k: String): String = opts.getOrElse(k,
-      { System.err.println(s"missing required --$k\n$usage"); sys.exit(2) })
-    import graft.streaming.StreamingLinkJob
+  /** `--stream`: the session-gap pipeline over the JSON v2 files under `in`,
+    * appending link deltas to `out`. The checkpoint lives at
+    * `out/_checkpoint` (the `_` prefix hides it from readers): the file sink
+    * skips every batch id its `_spark_metadata` log already holds, so a
+    * fresh checkpoint per run would restart at batch 0 and the sink would
+    * drop a re-run's new input. */
+  private def runStreaming(spark: SparkSession, in: String, out: String,
+      gapMinutes: Int, strict: Boolean): Unit = {
     val spans = LinkJob.fromJsonV2Shape(
-      spark.readStream.schema(graft.model.Span.jsonV2Schema).json(req("in")))
-    val deltas = StreamingLinkJob.linkStream(spans,
-      gapMinutes = opts.getOrElse("gap-minutes", "10").toInt,
-      strict = opts.contains("strict-trace-id"))
-    val checkpoint = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val query = deltas.writeStream
-      .format("parquet").option("path", req("out"))
-      .option("checkpointLocation", checkpoint)
+      spark.readStream.schema(Span.jsonV2Schema).json(in))
+    val query = graft.streaming.StreamingLinkJob.linkStream(spans, gapMinutes, strict)
+      .writeStream
+      .format("parquet").option("path", out)
+      .option("checkpointLocation", s"$out/_checkpoint")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     query.awaitTermination()
-    val n = spark.read.parquet(req("out")).count()
-    println(s"stream done deltas=$n out=${req("out")}")
+    val n = spark.read.parquet(out).count()
+    println(s"stream done deltas=$n out=$out")
   }
 
   private val usage =
-    "usage: graft.Main --day yyyy-MM-dd --in <spans path> --out <links path> " +
+    "usage: graft.Main --day yyyy-MM-dd --out <links path> " +
+      "[--in <spans path> | --in-spans <path> --in-annotations <path>] " +
+      s"[--format ${MainConfig.formats.mkString("|")}] " +
+      s"[--out-format ${MainConfig.outFormats.mkString("|")}] " +
       "[--backfill yyyy-MM-dd..yyyy-MM-dd] " +
       "[--admission index-day|per-span-window|root-in-window] [--strict-trace-id] [--master local[N]] " +
       "[--es-bulk [--es-hosts http://h1:9200,h2] [--es-timeout ms]] " +
       "[--cql-write [--c3-contact-points h1:9042,h2]] " +
-      "[--jdbc-write [--jdbc-dialect mysql|standard]]"
+      "[--jdbc-write [--jdbc-dialect mysql|standard]] " +
+      "[--stream [--gap-minutes N]]"
 
   private[graft] def parseArgs(args: Array[String]): Map[String, String] = {
     val flags = Set("strict-trace-id", "stream", "es-bulk", "cql-write", "jdbc-write")

@@ -138,10 +138,9 @@ object LinkJob {
 
   /** Core: spans → per-day dependency links.
     *
-    * @param strict    group by stored traceId verbatim vs low-64 unification
     * @param admission which spans/traces count toward the day
-    */
-  /** @param maxSpansPerTrace giant-trace guard (SURVEY §4.2): traces beyond
+    * @param strict    group by stored traceId verbatim vs low-64 unification
+    * @param maxSpansPerTrace giant-trace guard (SURVEY §4.2): traces beyond
     *   the cap keep their earliest `maxSpansPerTrace` spans (by timestamp,
     *   then id — deterministic). 0 = off (reference behavior). Salting cannot
     *   preserve tree-walk semantics, so a documented cap is the honest skew
@@ -183,10 +182,9 @@ object LinkJob {
       .as[DependencyLink]
   }
 
-  /** Sink: day-partitioned parquet with dynamic partition overwrite — the
-    * idempotent re-run/upsert semantics of the reference sinks (P15-P17). */
-  /** Day-partitioned dynamic-overwrite sink. `format` selects the storage
-    * codec (parquet default; orc/json/csv all keep the same idempotent
+  /** Sink: day-partitioned dynamic partition overwrite — the idempotent
+    * re-run/upsert semantics of the reference sinks (P15-P17). `format`
+    * selects the storage codec (parquet default; orc/json/csv keep the same
     * day-overwrite semantics — the partition layout, not the codec, is what
     * makes re-runs safe). */
   def writeLinks(links: Dataset[DependencyLink], day: String, outPath: String,
@@ -199,29 +197,21 @@ object LinkJob {
     (if (format == "csv") w.option("header", "true") else w).save(outPath)
   }
 
-  /** ES/OS-document-shaped sink parity (P16 — ElasticsearchDependenciesJob
-    * .java:209-221): one JSON doc per link with deterministic
-    * `id = parent|child`, so a re-run of the same day overwrites rather than
-    * duplicates. Day-scoped path = daily-index naming. */
-  def writeLinksAsJsonDocs(links: Dataset[DependencyLink], day: String, outPath: String): Unit =
-    links.select(
-      concat_ws("|", col("parent"), col("child")).as("id"),
-      col("parent"), col("child"), col("callCount"), col("errorCount"))
-      .write.mode("overwrite").json(s"$outPath/dependency-$day")
-
-  /** One day end-to-end: read → link → write → return links (persisted —
-    * the caller owns the cache and unpersists when done consuming). */
+  /** One day end-to-end: link → persist → count → write when non-empty.
+    * The count is the one action before the sink; an empty day writes no
+    * partition. Returns the persisted links and their count — the caller
+    * owns the cache and unpersists when done consuming. */
   def runDay(
-      spark: SparkSession,
-      inPath: String,
-      outPath: String,
+      spans: Dataset[Span],
       day: String,
+      outPath: String,
       admission: Admission = Admission.IndexDay,
       strict: Boolean = false,
       outFormat: String = "parquet"
-  ): Dataset[DependencyLink] = {
-    val links = linkSpans(readJsonV2(spark, inPath), day, admission, strict).persist()
-    if (!links.isEmpty) writeLinks(links, day, outPath, outFormat)
-    links
+  ): (Dataset[DependencyLink], Long) = {
+    val links = linkSpans(spans, day, admission, strict).persist()
+    val n = links.count()
+    if (n > 0) writeLinks(links, day, outPath, outFormat)
+    (links, n)
   }
 }

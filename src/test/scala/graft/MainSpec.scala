@@ -7,6 +7,197 @@ import org.scalatest.funsuite.AnyFunSuite
   * rules (ZipkinDependenciesJob.java:21-87). */
 class MainSpec extends AnyFunSuite {
   private val today = "2026-08-12"
+  private val fixture = getClass.getResource("/fixtures/spans_day.jsonl").getPath
+  private val Day = "2025-08-11"
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def linkRows(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Long, Long)] = {
+    import df.sparkSession.implicits._
+    df.select("parent", "child", "callCount", "errorCount")
+      .as[(String, String, Long, Long)].collect().toSeq
+  }
+
+  /** The fixture day in each file shape `dispatch` reads, as (format, the
+    * `--in*` flags, the same input read straight through the format's
+    * reader). v1 rows carry each v2 span as its core annotations: the
+    * kind's local/remote keys plus an `error` string tag. */
+  private lazy val fileSources: Seq[(String, Seq[String],
+      org.apache.spark.sql.SparkSession => org.apache.spark.sql.Dataset[graft.model.Span])] = {
+    import org.apache.spark.sql.functions._
+    import graft.pipeline.LinkJob
+    import graft.codec.V1SpanFold
+    val spark = graft.pipeline.SparkTestSession.get
+    val v2 = spark.read.schema(graft.model.Span.jsonV2Schema).json(fixture)
+      .where(col("traceId").isNotNull && col("id").isNotNull)
+    val csvDir = tmp("dispatch-csv")
+    v2.select(col("traceId"), col("parentId"), col("id"), col("kind"),
+        col("timestamp"), col("duration"), col("shared"),
+        col("localEndpoint.serviceName").as("localServiceName"),
+        col("remoteEndpoint.serviceName").as("remoteServiceName"),
+        element_at(col("tags"), "error").as("error"))
+      .coalesce(1).write.mode("overwrite").option("header", "true").csv(csvDir)
+    // a negative target base makes conv read the 64 bits as a signed long
+    def signed64(hex: org.apache.spark.sql.Column) = conv(hex, 16, -10).cast("long")
+    def hex64(c: String) = signed64(substring(col(c), -16, 16))
+    val kind = col("kind")
+    def ann(key: org.apache.spark.sql.Column, svc: String, aType: Int) =
+      struct(key.as("a_key"), col(svc).as("endpoint_service_name"), lit(aType).as("a_type"))
+    val rows = v2.select(
+        when(length(col("traceId")) > 16, signed64(substring(col("traceId"), 1, 16)))
+          .as("trace_id_high"),
+        hex64("traceId").as("trace_id"), hex64("parentId").as("parent_id"),
+        hex64("id").as("id"), col("timestamp").as("start_ts"),
+        explode(array(
+          ann(when(kind === "CLIENT", "cs").when(kind === "SERVER", "sr")
+            .when(kind === "PRODUCER", "ms").when(kind === "CONSUMER", "mr")
+            .otherwise("lc"), "localEndpoint.serviceName", -1),
+          ann(when(kind === "CLIENT", "sa").when(kind === "SERVER", "ca")
+            .when(kind.isin("PRODUCER", "CONSUMER"), "ma"), "remoteEndpoint.serviceName", -1),
+          ann(when(map_contains_key(col("tags"), "error"), "error"),
+            "localEndpoint.serviceName", 6))).as("a"))
+      .where(col("a.a_key").isNotNull)
+      .select(col("trace_id_high"), col("trace_id"), col("parent_id"), col("id"),
+        col("a.a_key").as("a_key"), col("a.endpoint_service_name").as("endpoint_service_name"),
+        col("a.a_type").as("a_type"), col("start_ts"))
+    val rowsDir = tmp("dispatch-v1rows")
+    rows.write.mode("overwrite").parquet(rowsDir)
+    val spansDir = tmp("dispatch-v1spans")
+    rows.select("trace_id", "parent_id", "id", "start_ts").distinct()
+      .write.mode("overwrite").parquet(spansDir)
+    val annosDir = tmp("dispatch-v1annos")
+    rows.select(col("trace_id"), col("id").as("span_id"), col("a_key"),
+        col("endpoint_service_name"), col("a_type"))
+      .write.mode("overwrite").parquet(annosDir)
+    val (lo, hi) = LinkJob.dayWindowMicros(Day)
+    Seq(
+      ("json-v2", Seq("--in", fixture), s => LinkJob.readJsonV2(s, fixture)),
+      ("csv", Seq("--in", csvDir), s => LinkJob.readCsvSpans(s, csvDir)),
+      ("v1-rows", Seq("--in", rowsDir),
+        s => V1SpanFold.foldWindow(s.read.parquet(rowsDir), lo, hi)),
+      ("v1-tables", Seq("--in-spans", spansDir, "--in-annotations", annosDir),
+        s => V1SpanFold.fromV1Tables(s.read.parquet(spansDir), s.read.parquet(annosDir), lo, hi)))
+  }
+
+  /** Runs `dispatch` for one file format into a fresh `--out` and returns
+    * the day partition it wrote next to `linkSpans` on the same input. */
+  private def dispatchFormat(spark: org.apache.spark.sql.SparkSession, format: String)
+      : (Set[(String, String, Long, Long)], Set[(String, String, Long, Long)]) = {
+    import org.apache.spark.sql.functions.col
+    val (_, inFlags, read) = fileSources.find(_._1 == format).get
+    val out = tmp(s"dispatch-$format-out")
+    val opts = Main.parseArgs((Seq("--day", Day, "--format", format,
+      "--admission", "per-span-window", "--out", out) ++ inFlags).toArray)
+    val resolved = MainConfig.resolve(opts, Map.empty, today).toOption.get
+    Main.dispatch(spark, opts, resolved, Map.empty)
+    val written = linkRows(spark.read.parquet(out).where(col("day") === Day)).toSet
+    val expected = linkRows(graft.pipeline.LinkJob.linkSpans(
+      read(spark), Day, Admission.PerSpanWindow).toDF()).toSet
+    (written, expected)
+  }
+
+  Seq("json-v2", "csv", "v1-rows", "v1-tables").foreach { format =>
+    test(s"dispatch --format $format writes the day's linkSpans result") {
+      val (written, expected) = dispatchFormat(graft.pipeline.SparkTestSession.get, format)
+      info(written.toSeq.sorted.mkString(" "))
+      assert(written.nonEmpty)
+      assert(written == expected)
+    }
+  }
+
+  test("dispatch on an empty day writes no day partition and skips write-backs") {
+    val spark = graft.pipeline.SparkTestSession.get
+    val out = s"${tmp("dispatch-empty")}/links"
+    // the ES host is never contacted: the write-back is skipped for 0 links
+    val opts = Main.parseArgs(Array("--day", Day, "--in", s"$out-no-such-input",
+      "--out", out, "--es-bulk", "--es-hosts", "http://127.0.0.1:1"))
+    val resolved = MainConfig.resolve(opts, Map.empty, today).toOption.get
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout)(Main.dispatch(spark, opts, resolved, Map.empty))
+    val dir = new java.io.File(out)
+    assert(!dir.exists || !dir.list().exists(_.startsWith("day=")))
+    val printed = stdout.toString
+    assert(printed.contains(s"day=$Day links=0"))
+    assert(printed.contains("skipping"))
+  }
+
+  test("the link path runs on a session with no graft_ functions and registers none") {
+    val fresh = graft.pipeline.SparkTestSession.get.newSession()
+    def graftFunctions = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(graftFunctions.isEmpty)
+    val (written, expected) = dispatchFormat(fresh, "json-v2")
+    assert(written.nonEmpty && written == expected)
+    assert(graftFunctions.isEmpty)
+  }
+
+  test("unknown --format and --out-format are rejected before a session, naming the valid values") {
+    val fmt = MainConfig.resolve(Map("format" -> "avro-v9"), Map.empty, today)
+    assert(fmt == Left("unknown --format avro-v9 " +
+      "(json-v2|csv|v1-rows|v1-tables|v1-jdbc|es-scroll|c3-span-table|c3-cql)"))
+    val out = MainConfig.resolve(Map("out-format" -> "xlsx"), Map.empty, today)
+    assert(out == Left("unknown --out-format xlsx (parquet|orc|json|csv)"))
+    // a profile's own format passes, and a valid --out-format is carried
+    assert(MainConfig.resolve(Map("out-format" -> "orc"),
+      Map("STORAGE_TYPE" -> "mysql"), today).map(_.outFormat) == Right("orc"))
+  }
+
+  /** One JSON v2 span line (services as given; `parent` empty for a root). */
+  private def spanLine(trace: String, id: String, parent: String, kind: String,
+      ts: Long, local: String, remote: String): String = {
+    val parentField = if (parent.isEmpty) "" else s""""parentId":"$parent","""
+    s"""{"traceId":"$trace",$parentField"id":"$id","kind":"$kind","timestamp":$ts,""" +
+      s""""localEndpoint":{"serviceName":"$local"},"remoteEndpoint":{"serviceName":"$remote"}}"""
+  }
+
+  /** Runs `--stream` over `in` into `out`; returns every delta row there. */
+  private def streamDeltas(in: String, out: String,
+      env: Map[String, String] = Map.empty): Seq[(String, String, Long, Long)] = {
+    val spark = graft.pipeline.SparkTestSession.get
+    val opts = Main.parseArgs(Array("--stream", "--in", in, "--out", out))
+    Main.dispatch(spark, opts, MainConfig.resolve(opts, env, today).toOption.get, env)
+    linkRows(spark.read.parquet(out))
+  }
+
+  test("--stream re-run into the same --out keeps the new input's deltas") {
+    val t0 = 1754870400000000L // 2025-08-11T00:00:00Z
+    val hour = 3600L * 1000000L
+    val in = tmp("stream-in")
+    val out = s"${tmp("stream-out")}/deltas"
+    def put(name: String, lines: String*): Unit = java.nio.file.Files.write(
+      java.nio.file.Paths.get(in, name), lines.mkString("\n").getBytes("UTF-8"))
+    // each file ends with a later trace that moves the watermark past the
+    // session gap of the traces before it
+    put("1.json",
+      spanLine("00000000000000a1", "0000000000000001", "", "CLIENT", t0, "frontend", "backend"),
+      spanLine("00000000000000f1", "0000000000000009", "", "CLIENT", t0 + 2 * hour, "w1", "z1"))
+    assert(streamDeltas(in, out).exists(d => d._1 == "frontend" && d._2 == "backend"))
+    put("2.json",
+      spanLine("00000000000000b2", "0000000000000002", "", "CLIENT", t0 + 3 * hour, "api", "auth"),
+      spanLine("00000000000000f2", "000000000000000a", "", "CLIENT", t0 + 5 * hour, "w2", "z2"))
+    val second = streamDeltas(in, out)
+    assert(second.exists(d => d._1 == "api" && d._2 == "auth"))
+    // the first run's deltas are kept, not written again
+    assert(second.count(d => d._1 == "frontend" && d._2 == "backend") == 1)
+  }
+
+  test("--stream honours STRICT_TRACE_ID: mixed-width ids stay separate traces") {
+    val t0 = 1754870401000000L
+    val in = tmp("stream-strict-in")
+    java.nio.file.Files.write(java.nio.file.Paths.get(in, "spans.json"), Seq(
+      spanLine("feedfacefeedface000000000000a002", "0000000000000003", "", "CLIENT",
+        t0, "frontend", "backend"),
+      spanLine("000000000000a002", "0000000000000004", "0000000000000003", "SERVER",
+        t0 + 100000L, "backend", "frontend"),
+      spanLine("00000000000000f3", "000000000000000b", "", "CLIENT",
+        t0 + 7200L * 1000000L, "w", "z")).mkString("\n").getBytes("UTF-8"))
+    def calls(env: Map[String, String]): Long =
+      streamDeltas(in, s"${tmp("stream-strict-out")}/deltas", env)
+        .filter(d => d._1 == "frontend" && d._2 == "backend").map(_._3).sum
+    assert(calls(Map("STRICT_TRACE_ID" -> "true")) == 2L)
+    assert(calls(Map.empty) == 1L)
+  }
 
   test("backfill range parses inclusively, oldest first") {
     assert(MainConfig.parseBackfill("2025-08-10..2025-08-12") ==

@@ -118,20 +118,6 @@ class LinkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       capped2.toSeq.sortBy(l => (l.parent, l.child)))
   }
 
-  test("ES-doc-shaped sink writes deterministic parent|child ids") {
-    val out = java.nio.file.Files.createTempDirectory("esdocs").toString
-    val links = LinkJob.linkSpans(LinkJob.readJsonV2(spark, fixture), Day,
-      Admission.PerSpanWindow)
-    LinkJob.writeLinksAsJsonDocs(links, Day, out)
-    val docs = spark.read.json(s"$out/dependency-$Day")
-    import spark.implicits._
-    val ids = docs.select("id").as[String].collect().toSet
-    assert(ids.contains("frontend|backend") && ids.contains("producer|kafka"))
-    // re-run overwrites (same doc count)
-    LinkJob.writeLinksAsJsonDocs(links, Day, out)
-    assert(spark.read.json(s"$out/dependency-$Day").count() == ids.size)
-  }
-
   test("flattened-CSV source links identically to the JSON v2 fixture") {
     import spark.implicits._
     // flatten the fixture day to the documented CSV contract and read back
