@@ -1,6 +1,5 @@
 package graft
 
-import graft.ops.Dedup.PhaseDescriptionPrefix
 import graft.ops.Graph.RoundDescriptionPrefix
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -36,11 +35,10 @@ import org.apache.spark.sql.SparkSession
   *    `raw_stages`, `raw_shuffle_read_bytes`, `raw_shuffle_write_bytes`,
   *    `raw_disk_spill_bytes`, `raw_task_gc_ms`), plus the top stages by
   *    wall time of each query's last run (`top_stages`). Jobs labelled
-  *    "dupClusters <phase>" by [[graft.ops.Dedup.dupClusters]] are summed
-  *    by job wall time per phase into `raw_cc_round_secs`, and jobs
-  *    labelled "Graph.<loop> rN" by the [[graft.ops.Graph]] loops into
-  *    `raw_graph_round_secs` (keyed "<loop> rN"), so a slow sample names
-  *    the round that stalled.
+  *    "Graph.<loop> rN" by the loops [[graft.ops.Graph.iterate]] drives
+  *    ([[graft.ops.Dedup.dupClusters]] among them) are summed by job wall
+  *    time per round into `raw_graph_round_secs` (keyed "<loop> rN"), so a
+  *    slow sample names the round that stalled.
   *  - `raw_canary_ms` times a fixed integer loop before each run: a
   *    host-noise reading that flags a capture taken on a busy box.
   *  - The cache manager is cleared and a System.gc() is forced between
@@ -61,30 +59,22 @@ object Bench {
     spillB: Long, gcMs: Long)
 
   /** What the listener saw during one query run; `roundMs` is keyed by
-    * (round family, label), see [[roundOf]]. */
+    * round label: job description "Graph.pageRank r3" → "pageRank r3". */
   private final case class RunStats(jobs: Int, stages: Seq[StageRow],
-    roundMs: Seq[((String, String), Long)])
-
-  /** The per-round family of a job description, with the round's label:
-    * "dupClusters r2" → ("cc", "r2"), "Graph.pageRank r3" → ("graph", "pageRank r3"). */
-  private def roundOf(desc: String): Option[(String, String)] =
-    if (desc.startsWith(PhaseDescriptionPrefix))
-      Some("cc" -> desc.stripPrefix(PhaseDescriptionPrefix))
-    else if (desc.startsWith(RoundDescriptionPrefix))
-      Some("graph" -> desc.stripPrefix(RoundDescriptionPrefix))
-    else None
+    roundMs: Seq[(String, Long)])
 
   /** Collects job and stage events between two [[take]] calls. */
   private final class RunListener extends SparkListener {
     private var jobs = 0
     private val stages = Vector.newBuilder[StageRow]
-    private val jobRound = scala.collection.mutable.Map.empty[Int, ((String, String), Long)]
-    private val roundMs = scala.collection.mutable.LinkedHashMap.empty[(String, String), Long]
+    private val jobRound = scala.collection.mutable.Map.empty[Int, (String, Long)]
+    private val roundMs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobs += 1
       Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-        .flatMap(roundOf)
+        .filter(_.startsWith(RoundDescriptionPrefix))
+        .map(_.stripPrefix(RoundDescriptionPrefix))
         .foreach(round => jobRound(j.jobId) = (round, j.time))
     }
     override def onJobEnd(j: SparkListenerJobEnd): Unit = synchronized {
@@ -249,9 +239,8 @@ object Bench {
     val failed = samples.collect { case (k, ts) if ts.exists(_.sec < 0) => jstr(k) }
     val sfNum = """sf([0-9]+(?:\.[0-9]+)?)""".r.findFirstMatchIn(sfDir).map(_.group(1))
       .getOrElse(jstr(sfDir))
-    def rawRounds(family: String) = obj(samples.flatMap { case (k, ts) =>
-      val objs = ts.map(_.stats.roundMs.collect { case ((`family`, l), ms) => l -> ms })
-        .filter(_.nonEmpty)
+    val rawRounds = obj(samples.flatMap { case (k, ts) =>
+      val objs = ts.map(_.stats.roundMs).filter(_.nonEmpty)
         .map(ps => obj(ps.map { case (l, ms) => l -> round3(ms / 1000.0) }))
       if (objs.isEmpty) None else Some(k -> arr(objs))
     })
@@ -270,8 +259,7 @@ object Bench {
       "runs_per_query" -> runs,
       "aggregation" -> jstr("median_after_discarding_run1"),
       "raw_runs" -> perRun(_.sec), "raw_gc_ms" -> perRun(_.gcMs),
-      "raw_cc_round_secs" -> rawRounds("cc"),
-      "raw_graph_round_secs" -> rawRounds("graph"),
+      "raw_graph_round_secs" -> rawRounds,
       "raw_canary_ms" -> perRun(s => round3(s.canaryMs))) ++
       onlyFilter.map(f => "subset_filter" -> jstr(f)) ++ Seq(
       "raw_jobs" -> perRun(_.stats.jobs),

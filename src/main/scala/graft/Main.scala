@@ -122,6 +122,16 @@ object MainConfig {
     case other => Left(s"unknown admission '$other' (index-day|per-span-window|root-in-window)")
   }
 
+  /** `--stream` reads JSON v2 files and appends parquet deltas for whatever
+    * days its input holds, so another input format, or a flag it would
+    * ignore (`--out-format`, `--backfill`, `--day`), is an error, not a
+    * silent no-op. */
+  private def streamConflict(opts: Map[String, String], format: String): Either[String, Unit] =
+    if (!opts.contains("stream")) Right(())
+    else if (format != "json-v2") Left(s"--stream reads json-v2 only, not --format $format")
+    else Seq("out-format", "backfill", "day").find(opts.contains)
+      .map(flag => s"--stream does not take --$flag").toLeft(())
+
   def resolve(opts: Map[String, String], env: Map[String, String],
       todayUtc: String): Either[String, Resolved] = {
     val profile = env.get("STORAGE_TYPE") match {
@@ -138,6 +148,7 @@ object MainConfig {
       admission <- admissionOf(opts.getOrElse("admission", p._2))
       format <- oneOf("format", opts.getOrElse("format", p._1), formats)
       outFormat <- oneOf("out-format", opts.getOrElse("out-format", "parquet"), outFormats)
+      _ <- streamConflict(opts, format)
     } yield Resolved(
       day = day,
       format = format,

@@ -498,8 +498,8 @@ object NorthStarQueries {
     * the byte bump stays ≤ 2), because the base corpus is hash-sparse and
     * a clustering of nothing proves nothing. Replica ids offset by
     * 999999 ≡ 0 (mod 3), preserving fakeAssets' modality derivation.
-    * Clustering is [[graft.ops.Dedup.dupClusters]]' adaptive pointer
-    * jumping — O(log D) rounds, never a driver-side union-find. */
+    * Clustering is [[graft.ops.Dedup.dupClusters]]: label propagation with
+    * pointer jumping, O(log D) rounds, never a driver-side union-find. */
   def phashDupClusters(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val replicas = docs
@@ -508,10 +508,7 @@ object NorthStarQueries {
       .withColumn("text",
         expr("concat(char(ascii(substring(text, 1, 1)) + 1), substring(text, 2))"))
     val assets = Multimodal.fakeAssets(docs.unionByName(replicas))
-    // persist: dupClusters reads the pair relation twice (edges = pairs ∪
-    // swapped). Ownership: Verify/Bench clear the cache after each query.
-    graft.ops.Dedup.dupClusters(
-      Multimodal.phashNearPairs(assets).select("idA", "idB").persist())
+    graft.ops.Dedup.dupClusters(Multimodal.phashNearPairs(assets).select("idA", "idB"))
       .withColumnRenamed("id", "asset_id")
       .withColumnRenamed("rep", "cluster_rep")
       .orderBy("asset_id")
@@ -880,10 +877,7 @@ object NorthStarQueries {
     * component's min-id representative — pairwise evidence → keep-one-per-
     * cluster decisions. Oracle: recursive-CTE transitive closure. */
   def dupClusters(spark: SparkSession, dir: String): DataFrame =
-    // persist: dupClusters reads the pair relation twice (edges = pairs ∪
-    // swapped) — uncached, the whole LSH + exact-verify pipeline would run
-    // twice. Ownership: Verify/Bench clear the cache after each query.
-    Dedup.dupClusters(ngramNearDups(spark, dir).select("idA", "idB").persist())
+    Dedup.dupClusters(ngramNearDups(spark, dir).select("idA", "idB"))
       .withColumnRenamed("id", "doc_id").withColumnRenamed("rep", "cluster_rep")
       .orderBy("doc_id")
 

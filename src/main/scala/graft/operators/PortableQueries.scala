@@ -61,10 +61,8 @@ object PortableQueries {
     * pipeline composition, not just its operators in isolation. */
   def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    // persist: dupClusters reads the pair relation twice (edges = pairs ∪
-    // swapped). Ownership: Verify/Bench clear the cache after each query.
     val pairs = PortableSketch.minhashNearDups(docs, "text", "doc_id",
-      k = 16, bands = 4, n = 3, threshold = 0.5).select("idA", "idB").persist()
+      k = 16, bands = 4, n = 3, threshold = 0.5).select("idA", "idB")
     val toks = docs.select(col("doc_id"), TextOps.tokenCount(col("text")).as("tokens"))
     Dedup.dupClusters(pairs)
       .join(toks, col("id") === col("doc_id"))

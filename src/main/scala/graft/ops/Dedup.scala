@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, KeyedCheckpoint}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard,
@@ -472,194 +472,78 @@ object Dedup {
     * (id, rep = the component's minimum id): the step that turns pairwise
     * near-dup evidence into keep-one-per-cluster decisions.
     *
-    * Iterative min-label propagation with adaptive pointer jumping:
-    * each round every node adopts the smallest label among itself and its
-    * neighbors; from round 3 on, labels additionally compress through their
-    * own representative (rep := rep-of-rep, the path-doubling step), so a
-    * depth-D component converges in O(log D) rounds instead of O(D) — a
-    * degenerate chain-shaped corpus (overlapping boilerplate forming one
-    * long near-dup path) stays tractable. Near-dup clusters are typically
-    * shallow (dup groups), so the first rounds skip the jump join and pay
-    * nothing for the safeguard. Each round is one equi-join plus one
-    * aggregation shuffling only (id, label) pairs; new labels are eagerly
-    * checkpointed each round — the label frame appears twice per
-    * iteration, so without lineage truncation the logical plan doubles every
-    * round (exponential planning cost), and the jump self-joins the
-    * materialized checkpoint, not the un-truncated subtree. An isEmpty
-    * probe on changed labels decides convergence. The standard MapReduce-CC
-    * shape — at scale each round moves |edges| 16-byte rows, never payloads.
-    *
-    * `checkpointDir`: None (default) truncates lineage with localCheckpoint —
-    * blocks live on executor storage, fastest, but an executor loss
-    * mid-iteration kills the job. On a long-running cluster job pass a
-    * reliable directory (HDFS/S3) instead: each round's labels are written
-    * to `checkpointDir` via `Dataset.checkpoint(eager = true)` and survive
-    * executor loss; the per-round (id, rep) frame is tiny relative to the
-    * near-dup pair evidence, so the durability costs little.
-    *
-    * Storage lifecycle: once round N's checkpoint has eagerly materialized,
-    * round N−1 can never be referenced again (N's lineage is truncated), so
-    * its blocks are unpersisted and its reliable checkpoint files deleted
-    * immediately. Without this, repeated calls in one JVM accumulate every
-    * round's blocks until GC/ContextCleaner pressure stalls a run (observed
-    * as a 3.3–17.5 s spread across identical q48 bench runs). OWNERSHIP of
-    * the returned frame: it is backed by the FINAL round's checkpoint; its
-    * blocks (and, on the reliable path, files) stay live until the caller
-    * either lets the frame be garbage-collected (ContextCleaner frees the
-    * blocks; reliable files need
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true`) or calls
-    * [[releaseClusterLabels]] after its terminal action.
+    * Min-label propagation with pointer jumping, a frontier loop on
+    * [[Graph.iterate]]. The pairs are symmetrised once into `(src, dst)`
+    * edges keyed on `src`; every node starts from the least of itself and
+    * its neighbours. A round:
+    *   - the nodes whose label changed last round offer it to their
+    *     neighbours: a join with the co-keyed edges and a `dst`
+    *     min-aggregate, so each round moves (id, label) rows, never payloads;
+    *     each node takes the least of its label and its offers, which land
+    *     keyed like the state;
+    *   - the pointer jump `rep := min(rep, S(rep))` looks the new label up in
+    *     the round's input state S, which is already a keyed checkpoint, so
+    *     a depth-D chain converges in O(log D) rounds instead of O(D).
+    * The loop ends after the first round that changes no label.
     *
     * Throws IllegalStateException if labels are still changing after
     * `maxIter` rounds: a truncated propagation silently splits one
     * component into several clusters, which a caller cannot distinguish
-    * from converged output — failing loudly beats returning wrong labels.
-    * With pointer jumping the default 20 rounds covers components ~2^17
-    * deep; hitting it means something is genuinely wrong.
+    * from converged output.
     *
-    * Each phase's jobs carry the job description "dupClusters init",
-    * "dupClusters r1", "dupClusters r2", … (each round includes its
-    * checkpoint materialization and the convergence probe), so a listener
-    * can name the round a slow run stalled in. The caller's own description
-    * is restored on return; the job group is left alone, since callers use
-    * it to cancel their jobs.
+    * Storage: the edges and every superseded round are released on return.
+    * The returned frame is backed by the final round's checkpoint and
+    * carries its stored size as statistics, so a caller's join can
+    * broadcast it; the caller frees it with [[releaseClusterLabels]] after
+    * its terminal action, or leaves it to ContextCleaner. Round N's jobs
+    * carry the job description "Graph.dupClusters rN".
     */
-  /** Prefix of the job description [[dupClusters]] gives each phase. */
-  private[graft] final val PhaseDescriptionPrefix = "dupClusters "
-
-  def dupClusters(
-      pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    def phase[A](label: String)(f: => A): A =
-      graft.util.JobLabel(sc, PhaseDescriptionPrefix + label)(f)
-    checkpointDir.foreach { dir =>
-      // setCheckpointDir stores a qualified <dir>/<UUID> path, so equality
-      // (Option.contains) never matches and every call would reset the dir
-      // and mint a fresh UUID subdir — compare by substring instead
-      if (!sc.getCheckpointDir.exists(_.contains(dir))) sc.setCheckpointDir(dir)
+  def dupClusters(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    // one explode reads the (often uncached) pair pipeline once
+    val edges = KeyedCheckpoint(pairs.select(explode(array(
+        struct(col("idA").as("src"), col("idB").as("dst")),
+        struct(col("idB").as("src"), col("idA").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")), "src")
+    // the edges are symmetric, so grouping on their key covers every node
+    val init = edges.groupBy(col("src").as("node"))
+      .agg(least(min(col("src")), min(col("dst"))).as("rep"))
+      .withColumn("changed", lit(true))
+    val states = Graph.iterate("dupClusters", init, maxIter, frontier = Some("changed")) { s =>
+      val moved = s.where(col("changed"))
+      val offers = edges.join(moved.hint("shuffle_hash"), edges("src") === moved("node"))
+        .groupBy(col("dst")).agg(min(col("rep")).as("offer"))
+      val stepped = s.hint("shuffle_hash").join(offers, s("node") === offers("dst"), "left")
+        .select(col("node"), least(col("rep"), col("offer")).as("_rep"), col("rep").as("_prev"))
+      val lookup = s.select(col("node").as("_j"), col("rep").as("_jrep"))
+      val rep = least(col("_rep"), col("_jrep"))
+      // <=>: a null label (from a null id in the pairs) compares as a value
+      stepped.join(lookup.hint("shuffle_hash"), col("_rep") === col("_j"), "left")
+        .select(col("node"), rep.as("rep"), not(rep <=> col("_prev")).as("changed"))
     }
-    def ckpt(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint() else df.localCheckpoint()
-    // Convergence is observed DURING the eager-checkpoint job instead of as
-    // a separate scan afterwards: a pass-through filter increments a fresh
-    // per-round accumulator for every row whose label moved, so each round
-    // runs one job, not two. Accumulator semantics make this safe: task
-    // replays can only over-count (never under-count), and an over-count
-    // merely schedules one extra round whose own probe then reads 0 — the
-    // loop can converge late, never early, and never on wrong labels.
-    def ckptProbed(df: DataFrame): (DataFrame, org.apache.spark.util.LongAccumulator) = {
-      val acc = sc.longAccumulator
-      val probe = udf { (changed: Boolean) => if (changed) acc.add(1L); true }
-      // null-safe comparison: `=!=` yields null when either side is null
-      // (possible via null ids in a caller-supplied pairs frame), and the
-      // primitive-Boolean UDF is null-short-circuited — the row would be
-      // FILTERED OUT of the checkpointed labels instead of counted as
-      // unchanged. `<=>` is always true/false, so the filter always passes.
-      (ckpt(df.where(probe(not(col("rep") <=> col("_prev"))))), acc)
+    val last = states.last
+    val converged = states.size <= maxIter || last.where(col("changed")).isEmpty
+    // a finished job has materialized every state, so none is read again
+    (edges +: states.init).foreach(releaseClusterLabels)
+    if (!converged) {
+      releaseClusterLabels(last)
+      throw new IllegalStateException(
+        s"dupClusters did not converge within maxIter=$maxIter rounds; " +
+          "labels were still changing (component diameter exceeds maxIter). " +
+          "Returning them would silently split components — raise maxIter.")
     }
-    // The edge relation is static across rounds and every round equi-joins
-    // it on _dst: hash-partition it by _dst ONCE before caching, so the
-    // cached partitioning satisfies each round's join distribution and only
-    // the (much smaller) label frame shuffles per round. At scale |edges| ≥
-    // |labels| by the component factor, so this halves per-round shuffle
-    // volume; the plan-level reuse is pinned in PlanSpec.
-    // The repartition is an unconditional extra shuffle of the doubled edge
-    // set before caching — deliberate 100 TB posture: per-round joins take
-    // the shuffle-join shape at scale, where the cached partitioning saves
-    // |edges| per round. Small inputs whose rounds broadcast the label side
-    // pay it for nothing; callers at toy scale can pre-partition themselves.
-    // Symmetrize via explode, not union-of-two-selects: a union references
-    // the `pairs` plan twice, and when the caller hands an UNCACHED pair
-    // pipeline (q48 end to end: banding + exact verify) the first edge
-    // materialization would compute that whole upstream twice. One explode
-    // reads it once and emits both directions — same rows, half the
-    // upstream work, and the downstream repartition/persist is unchanged.
-    val edges = pairs.select(explode(array(
-        struct(col("idA").as("_src"), col("idB").as("_dst")),
-        struct(col("idB").as("_src"), col("idA").as("_dst")))).as("_e"))
-      .select(col("_e._src").as("_src"), col("_e._dst").as("_dst"))
-      .repartition(col("_dst"))
-      .persist()
-    // round 0 folded into the init: every node starts from min(self, direct
-    // neighbors) — one aggregation instead of a full propagate round. The
-    // edge relation is symmetric (both directions in the union), so grouping
-    // on _dst is equivalent to grouping on _src — and _dst is the cached
-    // partitioning key, so the init aggregation runs exchange-free where a
-    // groupBy(_src) would re-shuffle the whole edge set once more.
-    var current = phase("init")(ckpt(edges
-      .groupBy(col("_dst").as("id"))
-      .agg(least(min(col("_src")), min(col("_dst"))).as("rep"))))
-    var labels = current
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      phase(s"r${iter + 1}") {
-        val neighborMin = edges.join(labels, col("_dst") === col("id"))
-          .groupBy(col("_src")).agg(min(col("rep")).as("_nrep"))
-        // carry the previous label through so convergence is observed inside
-        // the checkpoint job itself (ckptProbed), not by re-scanning the
-        // checkpointed frame afterwards
-        val steppedPlan = labels.as("cur")
-          .join(neighborMin, col("cur.id") === col("_src"), "left_outer")
-          .select(col("cur.id").as("id"),
-            least(col("cur.rep"), coalesce(col("_nrep"), col("cur.rep"))).as("rep"),
-            col("cur.rep").as("_prev")) // eager ckpt: materializes AND truncates lineage
-        val (next, acc) =
-          if (iter < 2) ckptProbed(steppedPlan)
-          else {
-            // pointer jump (path doubling): rep := rep's rep. Only engaged
-            // once a component has shown depth (> 2 rounds), so the common
-            // shallow case never pays this extra join. Every rep IS a node
-            // id (min over self ∪ neighbors ∪ earlier reps), so the lookup
-            // joins labels back to themselves on the materialized checkpoint.
-            // The half-step is checkpointed WITHOUT a probe — only the
-            // post-jump labels decide convergence.
-            val stepped = ckpt(steppedPlan)
-            val reps = stepped.select(col("id").as("_jid"), col("rep").as("_jrep"))
-            val jumped = ckptProbed(stepped
-              .join(reps, col("rep") === col("_jid"), "left_outer")
-              .select(col("id"),
-                least(col("rep"), coalesce(col("_jrep"), col("rep"))).as("rep"),
-                col("_prev")))
-            releaseClusterLabels(stepped) // jumped is materialized; the half-step is dead
-            jumped
-          }
-        converged = acc.value == 0L
-        releaseClusterLabels(current) // next is materialized; round N−1 is unreachable
-        current = next
-        labels = next.drop("_prev")
-        iter += 1
-      }
-    }
-    edges.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"dupClusters did not converge within maxIter=$maxIter rounds; " +
-        "labels were still changing (component diameter exceeds maxIter). " +
-        "Returning them would silently split components — raise maxIter.")
-    labels
+    KeyedCheckpoint.measured(last).select(col("node").as("id"), col("rep"))
   }
 
   /** Free the storage backing a checkpointed frame from [[dupClusters]]:
-    * unpersists the truncated-lineage RDD blocks and deletes reliable
-    * checkpoint files. Used internally to release each superseded round the
-    * moment its successor materializes; callers may invoke it on the
-    * returned labels after their terminal action instead of waiting for
+    * unpersists its checkpoint blocks. Callers may invoke it on the returned
+    * labels after their terminal action instead of waiting for
     * ContextCleaner. Safe on any frame (non-checkpoint leaves are ignored),
     * but the frame must not be read again afterwards — its lineage is
     * truncated, so lost blocks cannot be recomputed.
     */
-  def releaseClusterLabels(df: DataFrame): Unit = {
-    val hadoopConf = df.sparkSession.sparkContext.hadoopConfiguration
+  def releaseClusterLabels(df: DataFrame): Unit =
     df.queryExecution.logical.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-        lr.rdd.getCheckpointFile.foreach { f => // reliable path: files, not blocks
-          val p = new org.apache.hadoop.fs.Path(f)
-          try p.getFileSystem(hadoopConf).delete(p, true)
-          catch { case _: java.io.IOException => () } // cleanup is best-effort
-        }
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
-  }
 }

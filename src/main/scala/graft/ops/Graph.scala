@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Scale shape (the Pregel loop expressed in Catalyst) of every loop here —
   * the fixed-round [[pageRank]], [[personalizedPageRank]],
   * [[labelPropagation]], [[hits]], [[anfSketches]] and [[kCoreTrace]], and
-  * the frontier loops [[bfsDistances]], [[seedDistances]] and
-  * [[weightedDistances]] — all driven by [[iterate]]:
+  * the frontier loops [[bfsDistances]], [[seedDistances]],
+  * [[weightedDistances]] and [[Dedup.dupClusters]] — all driven by
+  * [[iterate]]:
   *   - the edge relation is keyed ONCE: hash-partitioned on `src` into
   *     exactly `spark.sql.shuffle.partitions` buckets and checkpointed with
   *     that layout recorded ([[org.apache.spark.sql.KeyedCheckpoint]]). A
@@ -82,7 +83,7 @@ object Graph {
     * is restored after each round. A `step` ending in an aggregate on a
     * column renamed to `node` is already keyed, so keying it costs no
     * shuffle. */
-  private def iterate(loop: String, init: DataFrame, rounds: Int,
+  private[ops] def iterate(loop: String, init: DataFrame, rounds: Int,
       frontier: Option[String] = None)(step: DataFrame => DataFrame): Seq[DataFrame] = {
     val sc = init.sparkSession.sparkContext
     def from(state: DataFrame, r: Int): List[DataFrame] =

@@ -43,18 +43,19 @@ object LinkJob {
     * day path yields an EMPTY dataset, matching the reference's
     * ES_INDEX_READ_MISSING_AS_EMPTY=true (ElasticsearchDependenciesJob
     * .java:66) — a day with no index is a day with no spans, not a failure. */
-  def readJsonV2(spark: SparkSession, path: String): Dataset[Span] = {
-    val exists = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val glob = fs.globStatus(p) // handles literal paths and day globs alike
-      glob != null && glob.nonEmpty
-    }
-    val raw =
-      if (exists) spark.read.schema(Span.jsonV2Schema).json(path)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Span.jsonV2Schema)
-    fromJsonV2Shape(raw)
+  def readJsonV2(spark: SparkSession, path: String): Dataset[Span] =
+    fromJsonV2Shape(readOrEmpty(spark, path, Span.jsonV2Schema)(_.json(path)))
+
+  /** `read` over `path` with `schema`, or an empty frame of that schema when
+    * nothing matches `path` (a literal path or a day glob): the file
+    * sources' missing-day-is-empty rule. */
+  private def readOrEmpty(spark: SparkSession, path: String,
+      schema: org.apache.spark.sql.types.StructType)(
+      read: org.apache.spark.sql.DataFrameReader => DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val glob = p.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(p)
+    if (glob != null && glob.nonEmpty) read(spark.read.schema(schema))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** Same projection from an already-loaded DataFrame in JSON v2 nested shape
@@ -102,8 +103,10 @@ object LinkJob {
       org.apache.spark.sql.types.StructField("remoteServiceName", org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("error", org.apache.spark.sql.types.StringType)))
 
+  /** The [[csvSpanSchema]] files at `path` as spans; a missing day path is
+    * an empty day, as for [[readJsonV2]]. */
   def readCsvSpans(spark: SparkSession, path: String): Dataset[Span] = {
-    val raw = spark.read.schema(csvSpanSchema).option("header", "true").csv(path)
+    val raw = readOrEmpty(spark, path, csvSpanSchema)(_.option("header", "true").csv(path))
     fromJsonV2Shape(raw.select(
       col("traceId"), col("parentId"), col("id"), col("kind"),
       col("timestamp"), col("duration"), col("shared"),

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -33,5 +34,19 @@ object KeyedCheckpoint {
     classic.Dataset.ofRows(session,
       LogicalRDD(lr.output, lr.rdd, HashPartitioning(Seq(keyAttr), n), Nil, isStreaming = false)(
         session, Some(lr.stats), Some(lr.constraints)))
+  }
+
+  /** `cut`, a checkpoint from [[apply]] that a finished job has materialized,
+    * with its stored size as its statistics. The size recorded at the cut is
+    * the estimate of the plan it cut, and that estimate multiplies through
+    * every join, so a small state several joins deep (477 rows estimated at
+    * 15 GiB) would never be broadcast into a caller's join. */
+  def measured(cut: DataFrame): DataFrame = {
+    val session = cut.sparkSession.asInstanceOf[classic.SparkSession]
+    val lr = cut.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val bytes = session.sparkContext.getRDDStorageInfo
+      .filter(_.id == lr.rdd.id).map(i => i.memSize + i.diskSize).sum
+    classic.Dataset.ofRows(session, lr.copy()(
+      session, Some(Statistics(sizeInBytes = bytes)), Some(lr.constraints)))
   }
 }

@@ -108,18 +108,21 @@ class MainSpec extends AnyFunSuite {
 
   test("dispatch on an empty day writes no day partition and skips write-backs") {
     val spark = graft.pipeline.SparkTestSession.get
-    val out = s"${tmp("dispatch-empty")}/links"
-    // the ES host is never contacted: the write-back is skipped for 0 links
-    val opts = Main.parseArgs(Array("--day", Day, "--in", s"$out-no-such-input",
-      "--out", out, "--es-bulk", "--es-hosts", "http://127.0.0.1:1"))
-    val resolved = MainConfig.resolve(opts, Map.empty, today).toOption.get
-    val stdout = new java.io.ByteArrayOutputStream()
-    Console.withOut(stdout)(Main.dispatch(spark, opts, resolved, Map.empty))
-    val dir = new java.io.File(out)
-    assert(!dir.exists || !dir.list().exists(_.startsWith("day=")))
-    val printed = stdout.toString
-    assert(printed.contains(s"day=$Day links=0"))
-    assert(printed.contains("skipping"))
+    // a missing day file is an empty day for json-v2 (the default) and csv
+    Seq(Nil, Seq("--format", "csv")).foreach { format =>
+      val out = s"${tmp("dispatch-empty")}/links"
+      // the ES host is never contacted: the write-back is skipped for 0 links
+      val opts = Main.parseArgs((Seq("--day", Day, "--in", s"$out-no-such-input",
+        "--out", out, "--es-bulk", "--es-hosts", "http://127.0.0.1:1") ++ format).toArray)
+      val resolved = MainConfig.resolve(opts, Map.empty, today).toOption.get
+      val stdout = new java.io.ByteArrayOutputStream()
+      Console.withOut(stdout)(Main.dispatch(spark, opts, resolved, Map.empty))
+      val dir = new java.io.File(out)
+      assert(!dir.exists || !dir.list().exists(_.startsWith("day=")))
+      val printed = stdout.toString
+      assert(printed.contains(s"day=$Day links=0"), format)
+      assert(printed.contains("skipping"), format)
+    }
   }
 
   test("the link path runs on a session with no graft_ functions and registers none") {
@@ -141,6 +144,20 @@ class MainSpec extends AnyFunSuite {
     // a profile's own format passes, and a valid --out-format is carried
     assert(MainConfig.resolve(Map("out-format" -> "orc"),
       Map("STORAGE_TYPE" -> "mysql"), today).map(_.outFormat) == Right("orc"))
+  }
+
+  test("--stream rejects a format other than json-v2 and the flags it would ignore") {
+    def resolve(args: String*)(env: Map[String, String] = Map.empty) =
+      MainConfig.resolve(Main.parseArgs(("--stream" +: args).toArray), env, today)
+    assert(resolve("--in", "x", "--out", "y")().map(_.format) == Right("json-v2"))
+    assert(resolve("--format", "csv")() == Left("--stream reads json-v2 only, not --format csv"))
+    // a backend profile's format conflicts as well
+    assert(resolve()(Map("STORAGE_TYPE" -> "mysql")) ==
+      Left("--stream reads json-v2 only, not --format v1-tables"))
+    assert(resolve("--out-format", "orc")() == Left("--stream does not take --out-format"))
+    assert(resolve("--backfill", "2025-08-01..2025-08-02")() ==
+      Left("--stream does not take --backfill"))
+    assert(resolve("--day", Day)() == Left("--stream does not take --day"))
   }
 
   /** One JSON v2 span line (services as given; `parent` empty for a root). */

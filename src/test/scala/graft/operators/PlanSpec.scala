@@ -367,48 +367,6 @@ class PlanSpec extends AnyFunSuite {
       s"global sequence must stay range-partitioned\n$p")
   }
 
-  test("dupClusters: the round join reuses the cached edge partitioning " +
-      "(edges never re-shuffle per round)") {
-    import spark.implicits._
-    // mimic one CC round: the static edge relation (hash-partitioned by _dst
-    // before caching — Dedup.dupClusters does the same) joined to a
-    // checkpointed label frame. Broadcast and AQE are disabled so the plan
-    // takes the shuffle-join shape it has at scale, where the reuse matters.
-    val restore = Seq(
-      "spark.sql.adaptive.enabled" -> spark.conf.get("spark.sql.adaptive.enabled"),
-      "spark.sql.autoBroadcastJoinThreshold" ->
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val pairs = (1L to 64L).map(i => (i, i + 1000L)).toDF("idA", "idB")
-      val edges = pairs.select($"idA".as("_src"), $"idB".as("_dst"))
-        .union(pairs.select($"idB".as("_src"), $"idA".as("_dst")))
-        .repartition(org.apache.spark.sql.functions.col("_dst")).persist()
-      edges.count()
-      val labels = pairs.select($"idA".as("id"), $"idA".as("rep")).localCheckpoint()
-      val round = edges.join(labels,
-          org.apache.spark.sql.functions.col("_dst") ===
-            org.apache.spark.sql.functions.col("id"))
-        .groupBy("_src").agg(org.apache.spark.sql.functions.min("rep").as("_nrep"))
-      val exec = round.queryExecution.executedPlan
-      val joins = exec.collect {
-        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j: org.apache.spark.sql.execution.SparkPlan
-        case j: org.apache.spark.sql.execution.joins.ShuffledHashJoinExec => j
-      }
-      assert(joins.nonEmpty, s"expected a shuffle join\n$exec")
-      val cachedSide = joins.head.children.find(c => c.collectFirst {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-      }.nonEmpty)
-      assert(cachedSide.nonEmpty, s"expected the cached edges under the join\n$exec")
-      val reshuffles = cachedSide.get.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
-      assert(reshuffles.isEmpty,
-        s"edges side re-shuffled despite cached hash partitioning:\n${cachedSide.get}")
-      edges.unpersist()
-    } finally restore.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   test("q95: the classifier gate aggregates partially before both exchanges") {
     val p = plan(SelectionQueries.classifierGate(spark, sf))
     assert(p.contains("partial_sum") && p.contains("partial_count"),
@@ -621,7 +579,9 @@ class PlanSpec extends AnyFunSuite {
       "bfsDistances" -> (() => graft.ops.Graph.bfsDistances(roundEdges, seeds, 3).collect()),
       "seedDistances" -> (() => graft.ops.Graph.seedDistances(roundEdges, seeds, 3).collect()),
       "weightedDistances" -> (() => graft.ops.Graph.weightedDistances(roundEdges, seeds, 3).collect()),
-      "anfSketches" -> (() => graft.ops.Graph.anfSketches(roundEdges, 2).foreach(_._2.collect())))
+      "anfSketches" -> (() => graft.ops.Graph.anfSketches(roundEdges, 2).foreach(_._2.collect())),
+      "dupClusters" -> (() => graft.ops.Dedup.dupClusters(
+        roundEdges.select($"src".as("idA"), $"dst".as("idB"))).collect()))
     for ((loop, run) <- loops) {
       val rounds = roundPlans(run())
       assert(rounds.nonEmpty, s"$loop: no round plan captured")

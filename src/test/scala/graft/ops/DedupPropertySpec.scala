@@ -6,7 +6,8 @@ import org.scalacheck.{Gen, Prop, Properties}
 /** Invariants of the hot-bucket candidate capping (Dedup.cappedPairs) over
   * random blocking relations — the skew guard must never invent pairs, must
   * be exhaustive below the cap, and must keep every hot-bucket member
-  * reachable through its representative. */
+  * reachable through its representative — and of the connected components
+  * over pair lists (Dedup.dupClusters), against a plain-Scala union-find. */
 class DedupPropertySpec extends Properties("cappedPairs") {
   private lazy val spark = SparkTestSession.get
 
@@ -59,4 +60,54 @@ class DedupPropertySpec extends Properties("cappedPairs") {
         }
       }
     }
+
+  // pair lists over a small id range: random pairs (duplicates, self-pairs
+  // and both orientations arise by themselves), stars and chains up to 60
+  // deep in either orientation, some pairs repeated or swapped; k = 0 is
+  // the empty list
+  private val genPairs: Gen[Seq[(Long, Long)]] = {
+    val id = Gen.choose(0L, 120L)
+    val loose = Gen.choose(1, 30).flatMap(Gen.listOfN(_, Gen.zip(id, id)))
+    val star = for {
+      hub <- id
+      n <- Gen.choose(1, 12)
+      leaves <- Gen.listOfN(n, id)
+    } yield leaves.map(hub -> _)
+    val chain = for {
+      start <- id
+      depth <- Gen.choose(1, 60)
+      flip <- Gen.prob(0.5)
+    } yield (start until start + depth).map(i => if (flip) (i + 1, i) else (i, i + 1))
+    for {
+      k <- Gen.choose(0, 3)
+      parts <- Gen.listOfN(k, Gen.oneOf(loose, star, chain))
+      again <- Gen.choose(0, 4)
+    } yield {
+      val all = parts.flatten
+      all ++ all.take(again) ++ all.takeRight(again).map(_.swap)
+    }
+  }
+
+  /** Each node's component minimum, by union-find with the smaller root
+    * always kept (so every root is its component's minimum id). */
+  private def minIdComponents(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.sorted.map(x => x -> find(x))
+  }
+
+  property("dupClusters assigns every node its component's minimum id") =
+    Prop.forAll(genPairs) { pairs =>
+      val s = spark
+      import s.implicits._
+      val got = Dedup.dupClusters(pairs.toDF("idA", "idB")).as[(Long, Long)].collect()
+      got.toSeq.sorted == minIdComponents(pairs)
+    }.useSeed(org.scalacheck.rng.Seed(20261019L))
 }

@@ -313,33 +313,6 @@ class DedupSpec extends AnyFunSuite {
     assert(afterRelease.isEmpty, s"final frame not released: $afterRelease")
   }
 
-  test("dupClusters: reliable checkpointDir path produces identical labels") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    try {
-      val pairs = Seq((2L, 3L), (1L, 2L), (3L, 9L), (5L, 7L)).toDF("idA", "idB")
-      // deep enough to run several rounds INCLUDING the pointer-jump branch,
-      // so every ckpt() call site exercises the reliable path
-      val chain = (100L until 140L).map(i => (i, i + 1)).toDF("idA", "idB")
-      val got = Dedup.dupClusters(pairs.union(chain), checkpointDir = Some(dir))
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-      val expected = Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (7L, 5L), (9L, 1L)) ++
-        (100L to 140L).map(i => (i, 100L))
-      assert(got == expected)
-      // the labels really were checkpointed to the reliable dir, and every
-      // superseded round's rdd-* directory was deleted — only the final
-      // round's checkpoint survives the call
-      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(p => java.nio.file.Files.isDirectory(p)
-          && p.getFileName.toString.startsWith("rdd-"))
-        .toArray.toSeq
-      assert(rddDirs.size == 1,
-        s"expected exactly the final round's checkpoint under $dir, got $rddDirs")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("dupClusters: labels each phase's jobs and restores the caller's description") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
@@ -362,15 +335,27 @@ class DedupSpec extends AnyFunSuite {
     }
     import scala.jdk.CollectionConverters._
     val descs = seen.asScala.toSeq.sortBy(_._1).map(_._2)
-    val labelled = descs.filter(_.startsWith("dupClusters "))
+    val labelled = descs.filter(_.startsWith("Graph.dupClusters "))
     val phases = labelled.distinct
-    assert(phases.size >= 3, s"expected init plus at least two rounds: $descs")
-    assert(phases == ("dupClusters init" +: (1 until phases.size).map(r => s"dupClusters r$r")))
+    assert(phases.size >= 2, s"expected at least two rounds: $descs")
+    assert(phases == (1 to phases.size).map(r => s"Graph.dupClusters r$r"))
     assert(labelled == labelled.sortBy(phases.indexOf(_)), s"phases out of order: $descs")
     // the caller's collect afterwards carries the caller's own description
-    val after = descs.reverse.takeWhile(!_.startsWith("dupClusters "))
+    val after = descs.reverse.takeWhile(!_.startsWith("Graph.dupClusters "))
     assert(after.nonEmpty && after.forall(_ == "caller job"),
       s"caller description not restored: $descs")
+  }
+
+  test("dupClusters: the labels carry their stored size, small enough to broadcast") {
+    import spark.implicits._
+    // four rounds of three joins each: the estimate recorded at each cut
+    // multiplies through them, far past any broadcast threshold
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("idA", "idB")
+    val labels = Dedup.dupClusters(chain)
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val size = labels.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > 0 && size <= threshold, s"estimated $size bytes for 13 labels")
+    Dedup.releaseClusterLabels(labels)
   }
 
   test("dupClusters: fails loudly instead of returning truncated labels") {
