@@ -32,31 +32,11 @@ object Span {
   val Server = "SERVER"
   val Producer = "PRODUCER"
   val Consumer = "CONSUMER"
-  private val validKinds = Set(Client, Server, Producer, Consumer)
-
-  /** Normalize a trace id the way zipkin does (Span.normalizeTraceId, public
-    * semantics pinned by our fixtures): lowercase; ids longer than 16 chars keep
-    * 32 (left-pad), shorter left-pad to 16. Non-hex input is left as-is after
-    * lowercasing (reference throws; we normalize permissively and let fixtures
-    * pin behavior — malformed ids simply group by their normalized form). */
-  def normalizeTraceId(raw: String): String = {
-    val s = raw.trim.toLowerCase
-    if (s.length == 16 || s.length == 32) s
-    else if (s.length < 16) ("0" * (16 - s.length)) + s
-    else if (s.length < 32) ("0" * (32 - s.length)) + s
-    else s.substring(s.length - 32)
-  }
 
   /** Last 16 hex chars = low 64 bits (128-bit ids unify with their 64-bit
     * reports under this key — SURVEY §2.3 trace-id width semantics). */
   def low64(traceId: String): String =
     if (traceId.length <= 16) traceId else traceId.substring(traceId.length - 16)
-
-  /** Unknown kind values are dropped (CassandraRowToSpan.java:42-48). */
-  def normalizeKind(raw: String): Option[String] = {
-    val k = if (raw == null) null else raw.toUpperCase
-    if (k != null && validKinds(k)) Some(k) else None
-  }
 
   /** Spark schema of the Zipkin JSON v2 span document (FIXTURES.md §1.1). */
   val jsonV2Schema: StructType = StructType(Seq(

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.link.DependencyLinker
 import graft.model.{DependencyLink, Span}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Admission semantics differ per reference backend and must be explicit
@@ -22,7 +22,7 @@ object Admission {
 
 /** The end-to-end dependency-link pipeline, Spark-first (SURVEY §3.4):
   * declarative scan → (pushed-down) day filter → typed island
-  * groupByKey(traceKey).flatMapGroups(linker) → relational
+  * groupBy(traceKey).flatMapSortedGroups(capOrder)(linkTrace) → relational
   * groupBy(parent,child).agg(sum,sum) → day-partitioned overwrite sink.
   *
   * Scale notes (100 TB posture):
@@ -31,7 +31,11 @@ object Admission {
   *    free from Catalyst (HashAggregate partial → Exchange → final).
   *  - span-level filters/projections stay relational so Parquet pushdown and
   *    column pruning apply before the typed island (verified via .explain —
-  *    see PipelineSpec).
+  *    see PlanSpec). The trace key is a column too, so spans reach the
+  *    shuffle as rows, never as objects.
+  *  - Spark's external sorter orders each trace by the cap order (and
+  *    spills), so with a cap set an island holds at most `maxSpansPerTrace`
+  *    spans, however large the trace.
   *  - the result is persisted before reuse: the reference recomputed its whole
   *    lineage twice (isEmpty + save, BASELINE.md); we do not.
   */
@@ -139,15 +143,45 @@ object LinkJob {
     }
   }
 
+  /** The trace grouping key: `traceId` verbatim when strict, else its low
+    * 64 bits (last 16 hex chars, `Span.low64`), so 128-bit ids unify with
+    * their 64-bit reports (SURVEY §2.3). Batch and streaming group on it. */
+  def traceKey(traceId: Column, strict: Boolean): Column =
+    if (strict) traceId else substring(traceId, -16, 16).as("traceKey")
+
+  /** The giant-trace cap order (SURVEY §4.2): earliest first with a missing
+    * timestamp last, then id, then shared — so a client/server pair that ties
+    * on (timestamp, id) is split the same way whatever the arrival order.
+    * `capOrder` sorts the batch groups; `capOrdering` is the same order on
+    * spans for the streaming state. Change them together. */
+  val capOrder: Seq[Column] = Seq(col("timestamp").asc_nulls_last, col("id"), col("shared"))
+  val capOrdering: Ordering[Span] =
+    Ordering.by(s => (s.timestamp.isEmpty, s.timestamp.getOrElse(0L), s.id, s.shared))
+
+  /** One trace of the island, its spans in cap order: keep the first `cap`
+    * (all when 0), drop the trace when `rootWindow` is set and a kept
+    * parentless span lacks a timestamp inside it (SpansToDependencyLinks
+    * .java:36-42), then link. Pulls at most `cap` spans from `spans`. */
+  private[pipeline] def linkTrace(spans: Iterator[Span], cap: Int,
+      rootWindow: Option[(Long, Long)]): Seq[DependencyLink] = {
+    val kept = (if (cap > 0) spans.take(cap) else spans).toVector
+    val admitted = rootWindow.forall { case (lo, hi) =>
+      kept.forall(s => s.parentId.isDefined || s.timestamp.exists(ts => ts >= lo && ts <= hi))
+    }
+    if (admitted) DependencyLinker.link(kept) else Nil
+  }
+
   /** Core: spans → per-day dependency links.
     *
-    * @param admission which spans/traces count toward the day
+    * @param admission which spans/traces count toward the day; RootInWindow
+    *   is judged per trace inside the island, where the trace is co-located
     * @param strict    group by stored traceId verbatim vs low-64 unification
-    * @param maxSpansPerTrace giant-trace guard (SURVEY §4.2): traces beyond
-    *   the cap keep their earliest `maxSpansPerTrace` spans (by timestamp,
-    *   then id — deterministic). 0 = off (reference behavior). Salting cannot
-    *   preserve tree-walk semantics, so a documented cap is the honest skew
-    *   mitigation. */
+    *   ([[traceKey]])
+    * @param maxSpansPerTrace giant-trace guard (SURVEY §4.2): a trace keeps
+    *   its first `maxSpansPerTrace` spans in [[capOrder]], taken from the
+    *   sorted group so the island holds no more. 0 = off (reference
+    *   behavior). Salting cannot preserve tree-walk semantics, so a
+    *   documented cap is the honest skew mitigation. */
   def linkSpans(
       spans: Dataset[Span],
       day: String,
@@ -158,28 +192,11 @@ object LinkJob {
     val spark = spans.sparkSession
     import spark.implicits._
     val (lo, hi) = dayWindowMicros(day)
-    val admitted = admit(spans, admission, lo, hi)
-    val rootWindow = admission == Admission.RootInWindow
-
-    // typed island: one shuffle on traceKey, then the per-trace graph walk.
-    // RootInWindow is enforced here, where the trace is already co-located
-    // (any parentless span with a missing/out-of-window timestamp drops the
-    // whole trace — SpansToDependencyLinks.java:36-42).
-    admitted
-      .groupByKey(s => if (strict) s.traceId else s.traceIdLow64)
-      .flatMapGroups { (_, it) =>
-        val all = it.toSeq
-        val spansOfTrace =
-          if (maxSpansPerTrace > 0 && all.size > maxSpansPerTrace)
-            all.sortBy(s => (s.timestamp.getOrElse(Long.MaxValue), s.id, s.shared))
-              .take(maxSpansPerTrace)
-          else all
-        val admitTrace = !rootWindow || spansOfTrace.forall { s =>
-          s.parentId.isDefined || s.timestamp.exists(ts => ts >= lo && ts <= hi)
-        }
-        if (admitTrace) DependencyLinker.link(spansOfTrace)
-        else Iterator.empty
-      }
+    val rootWindow = if (admission == Admission.RootInWindow) Some((lo, hi)) else None
+    admit(spans, admission, lo, hi)
+      .groupBy(traceKey($"traceId", strict))
+      .as[String, Span]
+      .flatMapSortedGroups(capOrder: _*)((_, it) => linkTrace(it, maxSpansPerTrace, rootWindow))
       .groupBy($"parent", $"child")
       .agg(sum($"callCount").as("callCount"), sum($"errorCount").as("errorCount"))
       .as[DependencyLink]

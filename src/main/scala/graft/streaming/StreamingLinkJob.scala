@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.link.DependencyLinker
 import graft.model.{DependencyLink, Span}
+import graft.pipeline.LinkJob
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -20,16 +21,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window over the deltas reproduces the batch day-bucket semantics.
   *
   * Scale posture: state per open trace is bounded by `maxSpansPerTrace`
-  * (giant-trace guard — same skew hazard as the batch path, SURVEY §4.2);
-  * spans beyond the cap are dropped deterministically (earliest-first kept)
-  * with the drop counted in the emitted metric row.
+  * (giant-trace guard — same skew hazard as the batch path, SURVEY §4.2).
+  * Traces are keyed by the batch key (`LinkJob.traceKey`) and capped in the
+  * batch order (`LinkJob.capOrdering`), so a trace keeps the spans the batch
+  * cap keeps, whatever their arrival order. The drop is not reported yet:
+  * `TraceState.dropped` is never emitted and stays so that existing
+  * checkpoints resume.
   */
 object StreamingLinkJob {
 
-  /** Spans buffered for one in-flight trace. */
+  /** Spans buffered for one in-flight trace, and how many the cap cut. */
   case class TraceState(spans: Seq[Span], dropped: Long)
-
-  case class TimedSpan(span: Span, eventTime: java.sql.Timestamp)
 
   /** Per-trace link deltas with the trace's UTC day bucket (from its earliest
     * span) — (day, parent, child, callCount, errorCount). */
@@ -45,16 +47,15 @@ object StreamingLinkJob {
     import spark.implicits._
 
     val gapMs = gapMinutes * 60L * 1000L
-    val timed = spans
-      .filter((s: Span) => s.timestamp.isDefined)
-      .map(s => TimedSpan(s, new java.sql.Timestamp(s.timestamp.get / 1000L)))
+    spans
+      .where($"timestamp".isNotNull) // event time is the span timestamp
+      .withColumn("eventTime", timestamp_micros($"timestamp"))
       .withWatermark("eventTime", s"$gapMinutes minutes")
-
-    timed
-      .groupByKey(t => if (strict) t.span.traceId else t.span.traceIdLow64)
+      .groupBy(LinkJob.traceKey($"traceId", strict))
+      .as[String, Span]
       .flatMapGroupsWithState[TraceState, LinkDelta](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[TimedSpan], state: GroupState[TraceState]) =>
+        (_: String, rows: Iterator[Span], state: GroupState[TraceState]) =>
           if (state.hasTimedOut) {
             // session gap elapsed: link the complete trace, emit, clear
             val st = state.get
@@ -67,17 +68,13 @@ object StreamingLinkJob {
             links.iterator.map(l =>
               LinkDelta(day, l.parent, l.child, l.callCount, l.errorCount))
           } else {
-            val incoming = rows.map(_.span).toSeq
             val prev = state.getOption.getOrElse(TraceState(Nil, 0L))
-            val all = prev.spans ++ incoming
-            val (kept, dropped) =
-              if (all.size <= maxSpansPerTrace) (all, prev.dropped)
-              else {
-                val k = all.sortBy(s => (s.timestamp.getOrElse(Long.MaxValue), s.id))
-                  .take(maxSpansPerTrace)
-                (k, prev.dropped + (all.size - maxSpansPerTrace))
-              }
-            state.update(TraceState(kept, dropped))
+            val all = prev.spans ++ rows
+            val kept =
+              if (maxSpansPerTrace > 0 && all.size > maxSpansPerTrace)
+                all.sorted(LinkJob.capOrdering).take(maxSpansPerTrace)
+              else all
+            state.update(TraceState(kept, prev.dropped + (all.size - kept.size)))
             // extend the session: timeout at (max event time in trace) + gap,
             // but never behind the current watermark + 1ms (else immediate
             // re-timeout before new data can arrive)

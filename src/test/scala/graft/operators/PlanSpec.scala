@@ -638,6 +638,16 @@ class PlanSpec extends AnyFunSuite {
     assert(exchangeCount == 2,
       s"trace shuffle + link-agg shuffle expected, got $exchangeCount\n$p")
     assert(p.contains("partial_sum"), "link aggregation must combine map-side")
+    assert(!p.contains("AppendColumns"), s"the trace key must be a column, not a lambda\n$p")
+    val tree = p.linesIterator.takeWhile(_.nonEmpty).map(_.trim.stripPrefix("+- ")).toSeq
+    assert(tree.count(_.startsWith("Sort ")) == 1 &&
+      tree(tree.indexWhere(_.startsWith("MapGroups ")) + 1).startsWith("Sort "),
+      s"exactly one Sort, right below MapGroups, expected\n$p")
+    val sortKeys = "\\(\\d+\\) Sort\\n[^\\n]*\\nArguments: \\[([^\\]]*)\\]".r
+      .findFirstMatchIn(p).map(_.group(1))
+    assert(sortKeys.exists(_.matches("traceKey#\\d+ ASC NULLS FIRST, timestamp#\\d+L ASC NULLS LAST, " +
+      "id#\\d+ ASC NULLS FIRST, shared#\\d+ ASC NULLS FIRST")),
+      s"the island sorts on the trace key, then the cap order; got $sortKeys\n$p")
   }
 
 }

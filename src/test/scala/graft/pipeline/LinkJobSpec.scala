@@ -118,6 +118,36 @@ class LinkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       capped2.toSeq.sortBy(l => (l.parent, l.child)))
   }
 
+  test("the island pulls at most maxSpansPerTrace spans from its sorted group") {
+    val t0 = 1754870400000000L
+    val trace = (0 until 1000).map { i =>
+      Span("000000000000beef", if (i == 0) None else Some(f"${i - 1}%016x"), f"$i%016x",
+        Some("SERVER"), Some(t0 + i), None, false, Some(s"svc${i % 5}"), None, false)
+    }
+    for (cap <- Seq(0, 1, 10, 999, 1000)) { // 0 = unbounded
+      val kept = if (cap == 0) trace.size else cap
+      var pulled = 0
+      val counting = trace.iterator.map { s => pulled += 1; s }
+      val links = LinkJob.linkTrace(counting, cap, None)
+      assert(pulled == kept, s"cap $cap pulled $pulled spans")
+      assert(linkMap(links) == linkMap(graft.link.DependencyLinker.link(trace.take(kept))))
+    }
+  }
+
+  test("the trace key column is Span.low64 (non-strict) and traceId (strict)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(8)
+    val ids = (0 to 40).flatMap(n => Seq.fill(3)(Seq.fill(n)(rnd.nextInt(16).toHexString).mkString))
+    val keys = ids.toDF("traceId").select($"traceId",
+      LinkJob.traceKey($"traceId", strict = false), LinkJob.traceKey($"traceId", strict = true))
+      .as[(String, String, String)].collect()
+    assert(keys.length == ids.size)
+    keys.foreach { case (id, low, strict) =>
+      assert(low == Span.low64(id), s"low-64 key of '$id'")
+      assert(strict == id, s"strict key of '$id'")
+    }
+  }
+
   test("flattened-CSV source links identically to the JSON v2 fixture") {
     import spark.implicits._
     // flatten the fixture day to the documented CSV contract and read back

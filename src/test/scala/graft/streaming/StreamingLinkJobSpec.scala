@@ -136,6 +136,44 @@ class StreamingLinkJobSpec extends AnyFunSuite {
     } finally query.stop()
   }
 
+  test("the cap splits a tied client/server pair as the batch cap does, whatever arrives first") {
+    // client and server halves of span b2 share timestamp and id: the cap
+    // boundary falls between them, and the batch order (shared last) keeps
+    // the client. The server half arrives one micro-batch earlier.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1754870400000000L
+    val root = span("00000000000000b7", "a1", None, "SERVER", "frontend", null, t0)
+    val client = span("00000000000000b7", "b2", Some("a1"), "CLIENT", "frontend", "proxy", t0 + 10L)
+    val server = span("00000000000000b7", "b2", Some("a1"), "SERVER", "backend", null, t0 + 10L)
+      .copy(shared = true)
+    val child = span("00000000000000b7", "c3", Some("b2"), "CLIENT", "backend", "db", t0 + 20L)
+    val cap = 2
+    val batch = graft.pipeline.LinkJob.linkSpans(Seq(root, client, server, child).toDS(),
+      "2025-08-11", graft.pipeline.Admission.IndexDay, maxSpansPerTrace = cap)
+      .as[(String, String, Long, Long)].collect().toSet
+    assert(batch == Set(("frontend", "proxy", 1L, 0L)))
+
+    val input = MemoryStream[Span]
+    val deltas = StreamingLinkJob.linkStream(input.toDS(), gapMinutes = 10, maxSpansPerTrace = cap)
+    val query = deltas.writeStream.format("memory").queryName("links_cap_tie")
+      .outputMode("append").start()
+    try {
+      input.addData(root, server); query.processAllAvailable()
+      input.addData(client, child); query.processAllAvailable()
+      input.addData(span("00000000000000b8", "f1", None, "CLIENT", "zz-sentinel", "zz-sentinel",
+        t0 + 3600L * 1000000L))
+      query.processAllAvailable()
+      input.addData(span("00000000000000b9", "f2", None, "CLIENT", "zz-sentinel", "zz-sentinel",
+        t0 + 7200L * 1000000L))
+      query.processAllAvailable()
+      val streamed = spark.sql("SELECT parent, child, callCount, errorCount FROM links_cap_tie")
+        .as[(String, String, Long, Long)].collect().toSet
+        .filter(r => !r._1.startsWith("zz-"))
+      assert(streamed == batch, s"stream kept a different half: $streamed != $batch")
+    } finally query.stop()
+  }
+
   test("giant-trace cap keeps earliest spans and still links") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
