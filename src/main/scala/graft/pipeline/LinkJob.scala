@@ -70,7 +70,7 @@ object LinkJob {
     df
       .where($"traceId".isNotNull && $"id".isNotNull)
       .select(
-        lower($"traceId").as("traceId"),
+        normalizeTraceId(lower($"traceId")).as("traceId"),
         lower($"parentId").as("parentId"),
         lower($"id").as("id"),
         upper($"kind").as("kind"),
@@ -85,6 +85,16 @@ object LinkJob {
       .withColumn("kind",
         when($"kind".isin(Span.Client, Span.Server, Span.Producer, Span.Consumer), $"kind"))
       .as[Span]
+  }
+
+  /** Zero-pad a non-empty trace id to 16 hex chars when shorter, and to 32
+    * when 17–31 chars long (`zipkin2.Span.normalizeTraceId`), so a short id
+    * groups with its padded report. */
+  private def normalizeTraceId(traceId: Column): Column = {
+    val width = length(traceId)
+    when(width.between(1, 15), lpad(traceId, 16, "0"))
+      .when(width.between(17, 31), lpad(traceId, 32, "0"))
+      .otherwise(traceId)
   }
 
   /** Flattened-CSV span source (header row required): columns
@@ -161,7 +171,9 @@ object LinkJob {
   /** One trace of the island, its spans in cap order: keep the first `cap`
     * (all when 0), drop the trace when `rootWindow` is set and a kept
     * parentless span lacks a timestamp inside it (SpansToDependencyLinks
-    * .java:36-42), then link. Pulls at most `cap` spans from `spans`. */
+    * .java:36-42), then link. Pulls at most `cap` spans from `spans`; under
+    * RootInWindow [[linkSpans]] sorts such a span first, so the kept spans
+    * judge the whole trace. */
   private[pipeline] def linkTrace(spans: Iterator[Span], cap: Int,
       rootWindow: Option[(Long, Long)]): Seq[DependencyLink] = {
     val kept = (if (cap > 0) spans.take(cap) else spans).toVector
@@ -174,7 +186,8 @@ object LinkJob {
   /** Core: spans → per-day dependency links.
     *
     * @param admission which spans/traces count toward the day; RootInWindow
-    *   is judged per trace inside the island, where the trace is co-located
+    *   is judged per trace inside the island, where the trace is co-located,
+    *   on all of its spans, the ones past the cap included
     * @param strict    group by stored traceId verbatim vs low-64 unification
     *   ([[traceKey]])
     * @param maxSpansPerTrace giant-trace guard (SURVEY §4.2): a trace keeps
@@ -193,10 +206,16 @@ object LinkJob {
     import spark.implicits._
     val (lo, hi) = dayWindowMicros(day)
     val rootWindow = if (admission == Admission.RootInWindow) Some((lo, hi)) else None
+    // Under RootInWindow a parentless span outside the window sorts first, so
+    // the cap never cuts the span that drops its trace. An admitted trace has
+    // none, so its spans keep the cap order.
+    val order =
+      if (rootWindow.isEmpty) capOrder
+      else ($"parentId".isNull && !coalesce($"timestamp".between(lo, hi), lit(false))).desc +: capOrder
     admit(spans, admission, lo, hi)
       .groupBy(traceKey($"traceId", strict))
       .as[String, Span]
-      .flatMapSortedGroups(capOrder: _*)((_, it) => linkTrace(it, maxSpansPerTrace, rootWindow))
+      .flatMapSortedGroups(order: _*)((_, it) => linkTrace(it, maxSpansPerTrace, rootWindow))
       .groupBy($"parent", $"child")
       .agg(sum($"callCount").as("callCount"), sum($"errorCount").as("errorCount"))
       .as[DependencyLink]

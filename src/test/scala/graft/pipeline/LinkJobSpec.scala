@@ -51,6 +51,32 @@ class LinkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(linkMap(unifiedOut.toSeq) == Map(("frontend", "backend") -> (1L, 0L)))
   }
 
+  test("json-v2 trace ids are zero-padded, so one trace reported at two widths links once") {
+    val t0 = 1754870400000000L
+    def line(traceId: String, id: String, kind: String, shared: Boolean, local: String,
+        remote: String, ts: Long) =
+      s"""{"traceId":"$traceId","id":"$id","kind":"$kind","shared":$shared,""" +
+        s""""timestamp":$ts,"localEndpoint":{"serviceName":"$local"},""" +
+        s""""remoteEndpoint":{"serviceName":"$remote"}}"""
+    val dir = java.nio.file.Files.createTempDirectory("padded-ids")
+    java.nio.file.Files.write(dir.resolve("spans.jsonl"), Seq(
+      // 3 hex chars, and the same trace padded to 16
+      line("ABC", "0000000000000001", "CLIENT", false, "frontend", "backend", t0),
+      line("0000000000000abc", "0000000000000001", "SERVER", true, "backend", "frontend", t0 + 1),
+      // 20 hex chars, and the same trace padded to 32
+      line("1234567890abcdef1234", "0000000000000002", "CLIENT", false, "web", "api", t0),
+      line("0000000000001234567890abcdef1234", "0000000000000002", "SERVER", true, "api", "web",
+        t0 + 1)).mkString("\n").getBytes("UTF-8"))
+    val spans = LinkJob.readJsonV2(spark, dir.toString)
+    assert(spans.collect().map(_.traceId).toSet ==
+      Set("0000000000000abc", "0000000000001234567890abcdef1234"))
+    for (strict <- Seq(true, false)) {
+      val out = LinkJob.linkSpans(spans, Day, Admission.IndexDay, strict = strict).collect()
+      assert(linkMap(out.toSeq) == Map(("frontend", "backend") -> (1L, 0L),
+        ("web", "api") -> (1L, 0L)), s"strict = $strict")
+    }
+  }
+
   test("root-in-window admission drops traces with timestamp-less roots") {
     import spark.implicits._
     val (lo, _) = LinkJob.dayWindowMicros(Day)
@@ -67,6 +93,24 @@ class LinkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // but both admitted under IndexDay
     val all = LinkJob.linkSpans(spans, Day, Admission.IndexDay).collect().toSeq
     assert(all.size == 2)
+  }
+
+  test("root-in-window under a cap still drops a trace whose root sorts past the cap") {
+    import spark.implicits._
+    val (lo, _) = LinkJob.dayWindowMicros(Day)
+    // the timestamp-less root sorts last in cap order, so a cap of 4 cuts it
+    val root = Span("0000000000000b03", None, "03" * 8, None, None, None, false,
+      Some("a"), None, false)
+    val children = (1 to 4).map(i => Span("0000000000000b03", Some("03" * 8), f"$i%016x",
+      Some("CLIENT"), Some(lo + i), None, false, Some("a"), Some(s"b$i"), false))
+    val spans = (root +: children).toDS()
+    for (cap <- Seq(0, 4)) {
+      val out = LinkJob.linkSpans(spans, Day, Admission.RootInWindow,
+        maxSpansPerTrace = cap).collect()
+      assert(out.isEmpty, s"cap $cap admitted a trace whose root is outside the window")
+    }
+    assert(LinkJob.linkSpans(spans, Day, Admission.IndexDay, maxSpansPerTrace = 4)
+      .collect().length == 4)
   }
 
   test("midnight straddle: root-window keeps whole trace; per-span splits it") {
