@@ -1,8 +1,9 @@
 package graft.pipeline
 
+import graft.expr.AsciiCaseFold
 import graft.link.DependencyLinker
 import graft.model.{DependencyLink, Span}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, ExpressionColumn, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Admission semantics differ per reference backend and must be explicit
@@ -63,17 +64,20 @@ object LinkJob {
   }
 
   /** Same projection from an already-loaded DataFrame in JSON v2 nested shape
-    * (e.g. parquet with localEndpoint/remoteEndpoint structs + tags map). */
+    * (e.g. parquet with localEndpoint/remoteEndpoint structs + tags map).
+    * Ids fold A–Z to a–z and kind to upper case with the ASCII kernel
+    * [[graft.expr.AsciiCase]] (why not `lower`/`upper`: see there); other
+    * bytes are kept. */
   def fromJsonV2Shape(df: DataFrame): Dataset[Span] = {
     val spark = df.sparkSession
     import spark.implicits._
     df
       .where($"traceId".isNotNull && $"id".isNotNull)
       .select(
-        normalizeTraceId(lower($"traceId")).as("traceId"),
-        lower($"parentId").as("parentId"),
-        lower($"id").as("id"),
-        upper($"kind").as("kind"),
+        normalizeTraceId(asciiFold($"traceId", upper = false)).as("traceId"),
+        asciiFold($"parentId", upper = false).as("parentId"),
+        asciiFold($"id", upper = false).as("id"),
+        asciiFold($"kind", upper = true).as("kind"),
         $"timestamp",
         $"duration",
         coalesce($"shared", lit(false)).as("shared"),
@@ -86,6 +90,9 @@ object LinkJob {
         when($"kind".isin(Span.Client, Span.Server, Span.Producer, Span.Consumer), $"kind"))
       .as[Span]
   }
+
+  private def asciiFold(c: Column, upper: Boolean): Column =
+    ExpressionColumn(AsciiCaseFold(ExpressionColumn.expression(c), upper))
 
   /** Zero-pad a non-empty trace id to 16 hex chars when shorter, and to 32
     * when 17–31 chars long (`zipkin2.Span.normalizeTraceId`), so a short id
@@ -225,12 +232,13 @@ object LinkJob {
     * re-run/upsert semantics of the reference sinks (P15-P17). `format`
     * selects the storage codec (parquet default; orc/json/csv keep the same
     * day-overwrite semantics — the partition layout, not the codec, is what
-    * makes re-runs safe). */
+    * makes re-runs safe). Dynamic overwrite is a write option, so the
+    * caller's session conf is left as it was. */
   def writeLinks(links: Dataset[DependencyLink], day: String, outPath: String,
       format: String = "parquet"): Unit = {
-    links.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     val w = links.withColumn("day", lit(java.sql.Date.valueOf(day)))
-      .write.mode("overwrite").partitionBy("day").format(format)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").format(format)
     // csv keeps a header row — symmetric with readCsvSpans (which requires
     // one) and non-lossy for downstream consumers of the links table
     (if (format == "csv") w.option("header", "true") else w).save(outPath)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.pipeline.{Admission, LinkJob, SparkTestSession}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Lower, Upper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SortExec, SparkPlan}
@@ -648,6 +648,17 @@ class PlanSpec extends AnyFunSuite {
     assert(sortKeys.exists(_.matches("traceKey#\\d+ ASC NULLS FIRST, timestamp#\\d+L ASC NULLS LAST, " +
       "id#\\d+ ASC NULLS FIRST, shared#\\d+ ASC NULLS FIRST")),
       s"the island sorts on the trace key, then the cap order; got $sortKeys\n$p")
+  }
+
+  test("link pipeline: span ids and kinds fold with the ASCII kernel, never Lower/Upper") {
+    val spans = LinkJob.fromJsonV2Shape(spark.read.schema(graft.model.Span.jsonV2Schema)
+      .json(getClass.getResource("/fixtures/spans_day.jsonl").getPath))
+    val optimized = LinkJob.linkSpans(spans, "2025-08-11", Admission.RootInWindow)
+      .queryExecution.optimizedPlan
+    val exprs = optimized.collect { case n => n.expressions }.flatten.flatMap(_.collect { case e => e })
+    assert(!exprs.exists(e => e.isInstanceOf[Lower] || e.isInstanceOf[Upper]),
+      s"Lower/Upper map case through ICU\n$optimized")
+    assert(exprs.exists(_.isInstanceOf[graft.expr.AsciiCaseFold]), s"\n$optimized")
   }
 
 }
